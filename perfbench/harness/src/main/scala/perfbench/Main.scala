@@ -17,19 +17,34 @@ import graft.text.{PorterStemmer, Tokenize}
 import graft.tfidf.TfIdf
 
 /** One benchmark run in one JVM: set up (session start and an untimed
-  * warm-up pass) several times, then run timed passes for the requested
-  * seconds, one operation at a time on one driver thread. With `--trace`
-  * the passes alternate untraced and traced, and a layer breakdown follows.
-  * The run's record goes to `result.json` in the work directory.
+  * warm-up pass), then a fixed number of timed passes, one operation at a
+  * time on one driver thread. With `--trace` the timed passes alternate
+  * untraced and traced, and a layer breakdown follows. The run's record goes to
+  * `result.json` in the work directory.
   *
   *   --workload corpus_ref|query_iterative
-  *   --seed N --seconds S --trace 0|1 --setups K
+  *   --seed N --seconds S --trace 0|1
   *   --input DIR   corpus_ref: holds text/ and parquet/; query: the tables
   *   --work DIR    scratch space for outputs, spans and the result
   */
 object Main {
 
-  val Iterative: Seq[String] = Seq("q_graph_hits")
+  /** Two fixpoints run by their builders. k-core reads the windowed edges
+    * through LabelsMemo, so each pass pays for the memo's producer once.
+    */
+  val Iterative: Seq[String] = Seq("q_graph_hits", "q_graph_kcore")
+  /** Timed passes after set-up. The JIT keeps compiling for minutes (Spark
+    * keeps generating code), so pass times never flatten within a run; a
+    * fixed count makes every run time the same passes. They take 25-35 s
+    * on a quiet 4-core machine, so the count, not `--seconds` (20 in
+    * BENCHMARK.json), decides how long a run times.
+    */
+  val TimedPasses = 8
+  /** Past this, timing stops at MinTimedPasses, so a run on a starved
+    * machine still ends in time.
+    */
+  val MaxTimedSeconds = 40.0
+  val MinTimedPasses = 3
   val CorpusJobs: Seq[String] = Seq("df_job", "idf_job", "pos_pairs", "pos_stripes")
 
   def main(argv: Array[String]): Unit = {
@@ -37,7 +52,6 @@ object Main {
     val run = new Run(
       workload = a("workload"), seed = a("seed").toLong,
       seconds = a("seconds").toDouble, traced = a("trace") == "1",
-      setups = a.getOrElse("setups", "3").toInt,
       input = Paths.get(a("input")).toAbsolutePath.toString,
       work = Paths.get(a("work")).toAbsolutePath)
     // Exit explicitly either way: Spark's non-daemon threads would keep a
@@ -62,17 +76,20 @@ final case class OpRun(op: String, builderS: Double, actionS: Double,
   def seconds: Double = builderS + actionS
 }
 
-final case class PassRun(wall: Double, cpu: Double, ops: Seq[OpRun], total: Counters,
-    memoEntries: Int)
+final case class PassRun(wall: Double, cpu: Double, steal: Double, ops: Seq[OpRun],
+    total: Counters, memoEntries: Int)
 
 final class Run(workload: String, seed: Long, seconds: Double, traced: Boolean,
-    setups: Int, input: String, val work: Path) {
+    input: String, val work: Path) {
 
   private val cores = Runtime.getRuntime.availableProcessors
   private val isCorpus = workload == "corpus_ref"
   private val keys: Seq[String] = workload match {
     case "corpus_ref" => Nil
-    case "query_iterative" => new scala.util.Random(seed).shuffle(Main.Iterative)
+    // java.util.Random's first draws barely differ between nearby seeds, so
+    // the seed is mixed first.
+    case "query_iterative" =>
+      new scala.util.Random(new java.util.SplittableRandom(seed).nextLong()).shuffle(Main.Iterative)
     case w => throw new IllegalArgumentException(s"unknown workload $w")
   }
   private val out = work.resolve("out").toString
@@ -92,6 +109,14 @@ final class Run(workload: String, seed: Long, seconds: Double, traced: Boolean,
   private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
   private def cpuNow(): Double = os.getProcessCpuTime / 1e9
+
+  /** (steal, all) jiffies of the machine: steal is CPU time the hypervisor
+    * gave to other guests while this one's CPUs wanted to run.
+    */
+  private def jiffies(): (Long, Long) = {
+    val v = Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+").tail.map(_.toLong)
+    (v(7), v.sum)
+  }
 
   private val ops: Seq[Op] =
     if (isCorpus) Seq(
@@ -168,6 +193,7 @@ final class Run(workload: String, seed: Long, seconds: Double, traced: Boolean,
       val c0 = if (trace) probe.snapshot(spark) else Counters()
       val t0 = now()
       val cpu0 = cpuNow()
+      val (steal0, all0) = jiffies()
       val runs = ops.flatMap { op =>
         attempted += 1
         try {
@@ -186,43 +212,41 @@ final class Run(workload: String, seed: Long, seconds: Double, traced: Boolean,
       }
       val wall = now() - t0
       val cpu = cpuNow() - cpu0
+      val (steal1, all1) = jiffies()
+      val steal = (steal1 - steal0).toDouble / math.max(1L, all1 - all0)
       val total = if (trace) probe.snapshot(spark) - c0 else Counters()
       probe.on = false
-      if (runs.size == ops.size) Some(PassRun(wall, cpu, runs, total, LabelsMemo.keys.size))
+      if (runs.size == ops.size) Some(PassRun(wall, cpu, steal, runs, total, LabelsMemo.keys.size))
       else None
     }
 
-  /** Session start and one untimed warm-up pass, which also reads every
-    * input footer the workload needs.
+  /** The cold path: from JVM start through session start and one untimed
+    * warm-up pass, which reads every input footer the workload needs, is
+    * the first to compile its code, and writes every output for the checks.
     */
-  private def setup(i: Int): Double = spans(s"setup:$i") {
-    if (spark != null) {
-      CacheScope.releaseAllScopes()
-      LabelsMemo.clear()
-      spark.stop()
-    }
-    val t0 = now()
+  private def setup(): Double = spans("setup") {
     spark = spans("session")(session())
-    pass(s"warmup$i", capture = i == 0, trace = false)
-    now() - t0
+    pass("warmup", capture = true, trace = false)
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1e3
   }
 
   def execute(): String = {
     Files.createDirectories(work.resolve("tmp"))
-    val setupTimes = (0 until setups).map(setup)
+    val setupS = setup()
     val untraced = scala.collection.mutable.ArrayBuffer.empty[PassRun]
     val tracedRuns = scala.collection.mutable.ArrayBuffer.empty[PassRun]
     val t0 = now()
     var i = 0
     // A failed pass ends the timing: the run is failed and never timed.
     var ok = failures.isEmpty
-    // Passes keep getting faster for a while (JIT), so every run makes the
-    // same number of timed passes, five untraced (one of each kind when
-    // tracing), and takes its median at the same point of the warm-up;
-    // more follow only if the requested seconds have not passed yet.
-    val minPasses = if (traced) 1 else 5
-    while (ok && (now() - t0 < seconds || untraced.size < minPasses ||
-        (traced && tracedRuns.size < minPasses))) {
+    // TimedPasses passes, and more while the requested seconds have not
+    // passed; past MaxTimedSeconds only up to MinTimedPasses untraced ones
+    // (one of each kind when tracing).
+    val minPasses = if (traced) 1 else Main.MinTimedPasses
+    def enough = untraced.size >= minPasses && (!traced || tracedRuns.size >= minPasses)
+    def more = (i < Main.TimedPasses || now() - t0 < seconds) &&
+      now() - t0 < Main.MaxTimedSeconds
+    while (ok && (!enough || more)) {
       val tr = traced && i % 2 == 1
       pass(s"timed$i", capture = false, trace = tr) match {
         case Some(p) => (if (tr) tracedRuns else untraced) += p
@@ -235,7 +259,7 @@ final class Run(workload: String, seed: Long, seconds: Double, traced: Boolean,
       else spans("layers")(layerMetrics(untraced.toSeq, tracedRuns.toSeq))
     if (isCorpus) writeStemMap()
     writeOracleSql()
-    val rec = record(setupTimes, untraced.toSeq, tracedRuns.toSeq, layers)
+    val rec = record(setupS, untraced.toSeq, tracedRuns.toSeq, layers)
     if (traced) Files.writeString(work.resolve("spans.json"), spans.json, UTF_8)
     CacheScope.releaseAllScopes()
     LabelsMemo.clear()
@@ -259,7 +283,7 @@ final class Run(workload: String, seed: Long, seconds: Double, traced: Boolean,
       .find(_.startsWith("VmHWM:"))
       .map(_.split("\\s+")(1).toDouble / 1024.0).getOrElse(Double.NaN)
 
-  private def record(setupTimes: Seq[Double], untraced: Seq[PassRun],
+  private def record(setupS: Double, untraced: Seq[PassRun],
       tracedRuns: Seq[PassRun], layers: Map[String, Double]): String = {
     val opTimes = ops.map(o => o.name ->
       Json.obj(Seq(
@@ -273,9 +297,10 @@ final class Run(workload: String, seed: Long, seconds: Double, traced: Boolean,
       "attempted" -> attempted.toString,
       "failures" -> failures.map { case (o, m) =>
         Json.obj(Seq("op" -> Json.str(o), "error" -> Json.str(m))) }.mkString("[", ",", "]"),
-      "setup_s" -> setupTimes.map(Json.num).mkString("[", ",", "]"),
+      "setup_s" -> Json.num(setupS),
       "pass_s" -> untraced.map(p => Json.num(p.wall)).mkString("[", ",", "]"),
       "pass_cpu_s" -> untraced.map(p => Json.num(p.cpu)).mkString("[", ",", "]"),
+      "pass_steal" -> untraced.map(p => Json.num(p.steal)).mkString("[", ",", "]"),
       "traced_pass_s" -> tracedRuns.map(p => Json.num(p.wall)).mkString("[", ",", "]"),
       "op_times" -> Json.obj(opTimes),
       "peak_rss_mb" -> Json.num(peakRssMb()),
@@ -307,6 +332,7 @@ final class Run(workload: String, seed: Long, seconds: Double, traced: Boolean,
     m("spark.spill_disk_mb") = avg(_.total.spillDisk / mb)
     m("spark.input_mb") = avg(_.total.input / mb)
     m("spark.slot_busy_frac") = avg(p => p.total.runMs / 1e3 / (p.wall * cores))
+    m("jvm.cpu_s") = avg(_.cpu)
     m("catalyst.plans") = avg(_.total.plans.toDouble)
     m("catalyst.analysis_ms") = avg(_.total.analysisMs.toDouble)
     m("catalyst.optimization_ms") = avg(_.total.optimizationMs.toDouble)

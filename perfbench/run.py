@@ -4,7 +4,7 @@ sources of the tree it sits in, makes the workload's inputs from the seed,
 times the workload, checks every output, and prints one JSON result as the
 last line of standard output.
 
-    python3 perfbench/run.py --workload corpus_ref --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload corpus_ref --seed 1 --seconds 20 --trace 0
 
 With ``--trace 0`` the metrics are the end-to-end ones of BENCHMARK.json,
 with ``--trace 1`` the per-layer ones. The line before the result carries
@@ -30,12 +30,12 @@ sys.path.insert(0, HERE)
 
 import checks  # noqa: E402
 import gen_corpus  # noqa: E402
-import gen_tables  # noqa: E402
 
 WORKLOADS = ("corpus_ref", "query_iterative")
 ARTICLES = 200            # corpus_ref: articles per generated corpus
-TABLE_SEED, TABLE_SF = 42, 0.01  # query workloads: fixed tables, seed orders keys
-SETUPS = 3                # set-ups per run; setup_s is their median
+# query workloads: the engine's seed-42 sf0.01 test tables the keys read,
+# checked in; the run's seed orders the keys.
+FIXTURE = os.path.join(HERE, "fixture", "sf0.01")
 JVM_HEAP = "1g"
 RUN_LIMIT_S = 170         # whole run, when nothing had to be built
 BUILD_LIMIT_S = 880       # whole run, when the engine was (re)built
@@ -171,18 +171,11 @@ def corpus_input(seed):
         return out, json.load(f)
 
 
-def table_input():
-    """The query tables do not depend on the run seed, so they are made once."""
-    out = os.path.join(WORK, f"tables-seed{TABLE_SEED}-sf{TABLE_SF}")
-    meta = os.path.join(out, "meta.json")
-    if not os.path.exists(meta):
-        tmp = out + ".tmp"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        gen_tables.generate(TABLE_SEED, TABLE_SF, tmp)
-        os.replace(tmp, out)
-    with open(meta) as f:
-        return out, json.load(f)
+def fixture_input():
+    files = sorted(f for f in os.listdir(FIXTURE) if f.endswith(".parquet"))
+    return FIXTURE, {"tables": "sf0.01", "input_bytes": sum(
+        os.path.getsize(os.path.join(FIXTURE, f)) for f in files),
+        "sha256": {f: checks.file_digest(os.path.join(FIXTURE, f)) for f in files}}
 
 
 # ------------------------------------------------------------------ main
@@ -209,7 +202,7 @@ def main():
     if a.workload == "corpus_ref":
         input_dir, meta = corpus_input(a.seed)
     else:
-        input_dir, meta = table_input()
+        input_dir, meta = fixture_input()
 
     run_dir = os.path.join(WORK, "run")
     if os.path.isdir(run_dir):
@@ -221,7 +214,7 @@ def main():
     code = run_bounded(
         ["java", *ADD_OPENS, f"-Xms{JVM_HEAP}", f"-Xmx{JVM_HEAP}", f"-Djava.io.tmpdir={run_dir}/tmp",
          "-cp", cp, "perfbench.Main", "--workload", a.workload, "--seed", str(a.seed),
-         "--seconds", str(a.seconds), "--trace", str(a.trace), "--setups", str(SETUPS),
+         "--seconds", str(a.seconds), "--trace", str(a.trace),
          "--input", input_dir, "--work", run_dir],
         log, deadline - 15, run_dir, env)
     steal1, total1 = cpu_times()
@@ -245,8 +238,7 @@ def main():
     else:
         metrics = {
             "wall_s": {"value": statistics.median(r["pass_s"]), "unit": "s"} if r["pass_s"] else None,
-            "cpu_s": {"value": statistics.median(r["pass_cpu_s"]), "unit": "s"} if r["pass_cpu_s"] else None,
-            "setup_s": {"value": statistics.median(r["setup_s"]), "unit": "s"},
+            "setup_s": {"value": r["setup_s"], "unit": "s"},
             "peak_rss_mb": {"value": r["peak_rss_mb"], "unit": "MB"},
         }
     metrics = {k: v for k, v in metrics.items() if v is not None}
@@ -256,6 +248,7 @@ def main():
         "commit": git_commit(), "source_sha256": src, "built": built,
         "nproc": r["cores"], "input": meta, "ops": r["ops"],
         "setup_s": r["setup_s"], "pass_s": r["pass_s"], "pass_cpu_s": r["pass_cpu_s"],
+        "pass_steal": r["pass_steal"],
         "traced_pass_s": r["traced_pass_s"],
         "op_s": {k: v["seconds"] for k, v in r["op_times"].items()},
         "failed_ratio": failed / attempted, "failures": failures,
