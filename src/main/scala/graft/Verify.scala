@@ -2,13 +2,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A key whose
+  * build or write throws is listed on stderr and makes the run exit 1
+  * after teardown, so tools/check.py never sees a silently short dump. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Optional 3rd+ args: restrict the dump to the named queries (local
-    // spot-checking with tools/check.py; the driver always passes two).
+    // Optional 3rd+ args: restrict the dump (results AND oracle SQL) to the
+    // named queries (local spot-checking with tools/check.py; the driver
+    // always passes two).
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
+    def selected(name: String): Boolean = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -18,13 +22,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = SparkEntry.queries
+      .filter { case (name, _) => selected(name) }
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
       finally CacheScope.releaseAll()
     }
@@ -41,6 +48,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Teardown hatch: reclaim scopes orphaned by any worker thread (safe
@@ -48,5 +56,10 @@ object Verify {
     CacheScope.releaseAllScopes()
     LabelsMemo.clear()
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} key(s) failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Fixpoint
+
 /** Connected components over near-dup candidate pairs: the step after LSH
   * in a real dedup pipeline — candidate pairs say "these two are dups",
   * clustering picks ONE canonical doc per group (min doc_id here).
@@ -13,8 +15,8 @@ import org.apache.spark.sql.functions._
   * (fully distributed); the driver only checks the converged flag — no
   * data ever reaches the driver. `maxIters` is a hard-fail guard: if the
   * fixpoint is not confirmed within the budget the call THROWS rather
-  * than ship partially propagated labels (strict=false downgrades to a
-  * WARN for exploratory use).
+  * than ship partially propagated labels ([[graft.Fixpoint]] owns the
+  * loop, the state pins and the state sizing).
   */
 object DedupClusters {
 
@@ -26,43 +28,6 @@ object DedupClusters {
     * driver/executor memory budget, where 2x10^7 would be >1.2 GB.
     */
   val MaxBroadcastLabels = 1000000L
-
-  /** The default (no `checkpointDir`) storage paths are node-local: the
-    * edge relation goes to a driver-created temp dir and iteration state to
-    * `localCheckpoint` blocks. On local[n] driver==executor and both work;
-    * on a real cluster executors would write `file:` paths the readers
-    * can't see, and localCheckpoint blocks die with their executor. Fail
-    * fast with the fix in the message rather than corrupt silently.
-    */
-  private[graft] def requireClusterSafe(master: String,
-      checkpointDir: Option[String]): Unit =
-    require(checkpointDir.isDefined || master.startsWith("local"),
-      s"DedupClusters: master '$master' is not local — pass checkpointDir= " +
-        "(or sc.setCheckpointDir) a shared-filesystem path (edge " +
-        "materialization and localCheckpoint are node-local and do not " +
-        "survive on a cluster)")
-
-  /** Resolve the reliable-checkpoint base: the explicit argument wins
-    * (and is installed on the context); on a NON-local master a dir the
-    * caller already configured via `sc.setCheckpointDir` also counts —
-    * the normal cluster deployment shape, which must not be forced to
-    * re-thread the path through every registered query (ADVICE r10). On
-    * local masters with no explicit argument this stays None so the
-    * iterative operators keep the faster executor-local `localCheckpoint`
-    * (and a test session that happens to carry a checkpoint dir doesn't
-    * silently re-route every suite's iteration state through it).
-    */
-  private[graft] def resolveReliableDir(sc: org.apache.spark.SparkContext,
-      checkpointDir: Option[String]): Option[String] = {
-    checkpointDir.foreach(sc.setCheckpointDir)
-    // local-cluster[...] runs executors as SEPARATE JVMs, so for fallback
-    // purposes it behaves like a real cluster (an inner fixpoint should
-    // ride the context's reliable dir, not executor-local blocks).
-    val isSingleJvm =
-      sc.master.startsWith("local") && !sc.master.startsWith("local-cluster")
-    if (checkpointDir.isDefined || isSingleJvm) checkpointDir
-    else sc.getCheckpointDir
-  }
 
   /** pairs(doc_a, doc_b) + universe(doc_id) -> (doc_id, cluster_id).
     *
@@ -89,14 +54,13 @@ object DedupClusters {
     * only when labels are genuinely still moving.
     *
     * `maxIters` is a hard-fail guard, not a knob the result quietly
-    * degrades around: exhausting it THROWS by default, because partially
-    * propagated cluster ids are data corruption downstream (keep-best
-    * would canonicalize against the wrong clusters). `strict = false` is
-    * the documented opt-out for exploratory runs that prefer the partial
-    * labels + WARN. Pointer jumping makes convergence O(log diameter)
-    * and [[seedLocal]] collapses everything co-partitioned before the
-    * first global iteration, so the default budget of 30 covers any
-    * diameter a physical graph can reach (2^30 ≈ 10^9).
+    * degrades around: exhausting it THROWS, because partially propagated
+    * cluster ids are data corruption downstream (keep-best would
+    * canonicalize against the wrong clusters). Pointer jumping makes
+    * convergence O(log diameter) and [[seedLocal]] collapses everything
+    * co-partitioned before the first global iteration, so the default
+    * budget of 30 covers any diameter a physical graph can reach
+    * (2^30 ≈ 10^9).
     *
     * `seedLocal`: seed the fixpoint with partition-local connected
     * components (one union-find pass over each edge partition, then a
@@ -112,26 +76,10 @@ object DedupClusters {
     * (spec use).
     */
   def clusters(pairs: DataFrame, universe: DataFrame, maxIters: Int = 30,
-      checkpointDir: Option[String] = None, strict: Boolean = true,
+      checkpointDir: Option[String] = None,
       seedLocal: Boolean = true): DataFrame = {
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    def timed[T](what: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      log.info(f"[graft] clusters $what%-18s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    // Iterative-algorithm storage discipline: eager checkpoints, NOT
-    // persist/unpersist. Unpersisting an upstream cache invalidates
-    // dependent InMemoryRelations and re-registers them on the RAW plan,
-    // so later iterations silently recompute the entire candidate-pair
-    // lineage (measured: 30-140s per iteration instead of ~1s). Eager
-    // checkpoints materialize AND truncate lineage, so each iteration
-    // starts from stored blocks whatever happens upstream.
-    val reliableDir =
-      resolveReliableDir(pairs.sparkSession.sparkContext, checkpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (reliableDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+    val ss = pairs.sparkSession
+    val pin = new Fixpoint.Pinner(ss.sparkContext, checkpointDir)
 
     // pairs is usually an expensive LSH pipeline; it must be materialized
     // exactly once. Two subtleties, both measured at sf0.1:
@@ -147,31 +95,21 @@ object DedupClusters {
     //     relation is broadcast in the iteration joins without hints. On a
     //     cluster this is a reliable checkpoint to the shared FS
     //     (`checkpointDir`); locally it spills to a temp dir — node-local
-    //     either way, hence the cluster-safety guard, and deleted after the
-    //     fixpoint (every downstream reference is materialized in pinned
-    //     state by then).
-    val ss = pairs.sparkSession
-    requireClusterSafe(ss.sparkContext.master, reliableDir)
-    val base = reliableDir.getOrElse(
+    //     either way, hence the pinner's cluster-safety guard, and deleted
+    //     after the fixpoint (every downstream reference is materialized in
+    //     pinned state by then).
+    val base = pin.reliableDir.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-clusters-").toString)
     val edgesPath = s"$base/edges.parquet"
-    timed("write(edges)")(pairs.select(explode(array(
+    pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .write.mode("overwrite").parquet(edgesPath))
+      .write.mode("overwrite").parquet(edgesPath)
     val edges = ss.read.parquet(edgesPath)
-    // Cheap: a column-less aggregate over the just-written files.
-    val nEdges = edges.count()
-
-    // Iteration state is candidate-graph-sized — a sliver of the corpus
-    // (that's what LSH is for). Pinning ~10^2..10^5 rows across the full
-    // spark.sql.shuffle.partitions is pure scheduler overhead, multiplied
-    // by 2 pins x iterations x bench runs; coalesce every state relation
-    // to a count-derived handful of partitions (~500k edges each, so a
-    // 100 TB candidate graph still fans out wide) before materializing.
-    val nState = math.max(1L, math.min(
-      ss.sparkContext.defaultParallelism.toLong, nEdges / 500000L)).toInt
+    // Cheap: a column-less aggregate over the just-written files. Every
+    // state relation is coalesced to the count-derived partition number.
+    val nState = Fixpoint.stateParts(ss.sparkContext, edges.count())
     def pinState(df: DataFrame): DataFrame = pin(df.coalesce(nState))
 
     // Seed labels: partition-local union-find (see scaladoc). The RDD hop
@@ -218,66 +156,54 @@ object DedupClusters {
             localDf.groupBy(col("root")).agg(min(col("doc_id")).as("lbl")), "root")
           .groupBy(col("doc_id")).agg(min(col("lbl")).as("cluster_id"))
       }
-    var labels = timed("pin(labels0)")(pinState(labels0))
+    var labels = pinState(labels0)
     // Structural fast path: when the seed union-find ran over a SINGLE
     // partition it saw the entire edge relation, so its components are
     // the exact global components and labels0 IS a confirmed fixpoint —
     // iterating would only re-prove it. (nState > 1 — a genuinely large
     // candidate graph — always takes the loop.)
-    var converged = seedLocal && nState == 1
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val nbrMin = edges
-        .join(labels, edges("dst") === labels("doc_id"))
-        .groupBy(col("src"))
-        .agg(min(col("cluster_id")).as("nbr_min"))
-      // checkpointed: referenced by BOTH sides of the shortcut join.
-      val propagated = timed(s"pin(prop$iter)")(pinState(labels
-        .join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
-        .select(labels("doc_id"), col("cluster_id").as("prev_cluster_id"),
-          least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
-            .as("cluster_id"))))
-      // pointer jumping: follow the label's label — turns O(diameter)
-      // convergence into O(log diameter) (long chains otherwise eat the
-      // iteration budget). `chg` carries the convergence signal out of
-      // the same projection.
-      val next = timed(s"pin(next$iter)")(pinState(propagated.as("l")
-        .join(propagated.select(col("doc_id").as("rid"), col("cluster_id").as("rcid")).as("r"),
-          col("l.cluster_id") === col("r.rid"), "left")
-        .select(col("l.doc_id").as("doc_id"),
-          coalesce(col("rcid"), col("l.cluster_id")).as("cluster_id"),
-          (coalesce(col("rcid"), col("l.cluster_id")) =!= col("l.prev_cluster_id"))
-            .as("chg"))))
-      // Scan of the blocks `pin` just wrote — no join, no shuffle.
-      converged = timed(s"isEmpty$iter")(next.filter(col("chg")).limit(1).isEmpty)
-      labels = next.drop("chg")
-      iter += 1
-    }
-    // The edge materialization is fully consumed: every downstream
-    // reference lives in pinned (checkpointed) state, so drop the files
-    // now — leaving them would leak a full edge-relation copy per
-    // invocation (x2 cluster queries x warm-up + n bench runs). Runs
-    // before the strictness check so the failure path cleans up too.
-    timed("delete(edges)") {
+    val seededExactly = seedLocal && nState == 1
+    // The edge materialization is fully consumed once the loop ends:
+    // every downstream reference lives in pinned (checkpointed) state, so
+    // the files go now — leaving them would leak a full edge-relation copy
+    // per invocation (x2 cluster queries x warm-up + n bench runs). The
+    // `finally` cleans up on the budget-exhaustion path too.
+    try {
+      if (!seededExactly) Fixpoint.until("DedupClusters.clusters", maxIters) { _ =>
+        val nbrMin = edges
+          .join(labels, edges("dst") === labels("doc_id"))
+          .groupBy(col("src"))
+          .agg(min(col("cluster_id")).as("nbr_min"))
+        // checkpointed: referenced by BOTH sides of the shortcut join.
+        val propagated = pinState(labels
+          .join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
+          .select(labels("doc_id"), col("cluster_id").as("prev_cluster_id"),
+            least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
+              .as("cluster_id")))
+        // pointer jumping: follow the label's label — turns O(diameter)
+        // convergence into O(log diameter) (long chains otherwise eat the
+        // iteration budget). `chg` carries the convergence signal out of
+        // the same projection.
+        val next = pinState(propagated.as("l")
+          .join(propagated.select(col("doc_id").as("rid"), col("cluster_id").as("rcid")).as("r"),
+            col("l.cluster_id") === col("r.rid"), "left")
+          .select(col("l.doc_id").as("doc_id"),
+            coalesce(col("rcid"), col("l.cluster_id")).as("cluster_id"),
+            (coalesce(col("rcid"), col("l.cluster_id")) =!= col("l.prev_cluster_id"))
+              .as("chg")))
+        labels = next.drop("chg")
+        // Scan of the blocks `pin` just wrote — no join, no shuffle.
+        next.filter(col("chg")).limit(1).isEmpty
+      }
+    } finally {
       val root = new org.apache.hadoop.fs.Path(
-        if (reliableDir.isDefined) edgesPath else base)
+        if (pin.reliableDir.isDefined) edgesPath else base)
       root.getFileSystem(ss.sparkContext.hadoopConfiguration).delete(root, true)
-    }
-    if (!converged) {
-      // Partially propagated labels are silent data corruption for every
-      // consumer (keep-best canonicalizes against the wrong clusters), so
-      // cap exhaustion is an ERROR unless the caller explicitly opted out.
-      val msg = s"DedupClusters did not reach a confirmed fixpoint in " +
-        s"$maxIters iterations; cluster ids would be partially propagated " +
-        "— raise maxIters (convergence is O(log diameter)) or pass " +
-        "strict=false to accept partial labels"
-      if (strict) throw new IllegalStateException(msg)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(s"[graft] $msg")
     }
     // The labels count drives the broadcast gate below AND confirms the
     // pinned state is fully materialized; it is a scan of the checkpoint
     // blocks `pin` just wrote — no shuffle.
-    val nLabels = timed("count(labels)")(labels.count())
+    val nLabels = labels.count()
     // singletons (never paired) keep their own id. The checkpointed label
     // relation has no stats for the planner, so hint the broadcast
     // ourselves when the measured label relation is small — and keep the

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** SQL registration for the engine's custom Catalyst expressions, so
   * `spark.sql("SELECT porter_stem(term) ...")` works alongside the Column
@@ -11,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * Two integration paths:
   *   - [[GraftFunctions.register]] — imperative per-session registration;
-  *   - [[GraftExtensions]] — the injection-point path:
-  *     `--conf spark.sql.extensions=graft.functions.GraftExtensions`
+  *   - [[graft.plans.GraftExtensions]] — the injection-point path:
+  *     `--conf spark.sql.extensions=graft.plans.GraftExtensions`
   *     loads the functions into EVERY session of the deployment at
   *     session-build time, the way a library ships Catalyst extensions.
   */
@@ -39,18 +38,4 @@ object GraftFunctions {
       registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
-}
-
-/** `spark.sql.extensions` entry point (zero-arg class contract). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    // ExpressionInfo's 5-arg ctor is (className, db, name, usage, extended):
-    // the implementing class and a null db, so DESCRIBE FUNCTION reports
-    // the real class instead of a bogus database.
-    GraftFunctions.All.foreach { case (name, builder, usage, clazz) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(clazz, null, name, usage, ""),
-        builder))
-    }
 }

@@ -252,26 +252,18 @@ object CommunityQueries extends QueryPack {
       trussOf(windowedEdges(s, d))))
 
   /** The k-truss peel fixpoint over any symmetric (src, dst) relation.
-    * Iteration state rides eager checkpoints (reliable dir on a cluster,
-    * localCheckpoint only in local mode) — the KCore / DedupClusters
-    * pin-and-truncate storage discipline; exercised under a real
+    * Iteration state and the round budget are [[graft.Fixpoint]]'s
+    * (eager pins, reliable dir on a cluster); exercised under a real
     * multi-JVM master in LocalClusterSmoke.
     */
   def trussOf(edgesDf: DataFrame,
       checkpointDir: Option[String] = None): DataFrame = {
-    val s = edgesDf.sparkSession
-    val sc = s.sparkContext
-    val reliableDir =
-      graft.dedup.DedupClusters.resolveReliableDir(sc, checkpointDir)
-    graft.dedup.DedupClusters.requireClusterSafe(sc.master, reliableDir)
-    def pin(df: DataFrame): DataFrame =
-      if (reliableDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+    val pin = new graft.Fixpoint.Pinner(edgesDf.sparkSession.sparkContext,
+      checkpointDir)
     var und = edgesDf.filter(col("src") < col("dst"))
       .select(col("src").as("a"), col("dst").as("b"))
       .transform(graft.CacheScope.persisted(_))
     var prev = und.count()
-    var converged = false
     // Each round's pin CARRIES the support it peeled on (r16): on the
     // converged round the edge set didn't change (the filter only removes,
     // so equal counts mean the identical set), hence the support computed
@@ -280,7 +272,7 @@ object CommunityQueries extends QueryPack {
     // whole triangle enumeration one more time (the old final
     // edgeSupport(und) pass, the single costliest job of the query).
     var cur = und.select(col("a"), col("b"), lit(0L).as("support"))
-    for (_ <- 1 to TrussMaxRounds if !converged) {
+    graft.Fixpoint.until("trussOf", TrussMaxRounds) { _ =>
       val sup = edgeSupport(und)
       cur = pin(und.join(sup, Seq("a", "b"), "left")
         .filter(coalesce(col("support"), lit(0L)) >= TrussK - 2)
@@ -288,12 +280,10 @@ object CommunityQueries extends QueryPack {
           coalesce(col("support"), lit(0L)).as("support")))
       und = cur.select(col("a"), col("b"))
       val c = cur.count()
-      if (c == prev) converged = true
+      val stable = c == prev
       prev = c
+      stable
     }
-    require(converged,
-      s"trussOf: no fixpoint within $TrussMaxRounds peel rounds " +
-        s"(${prev} edges remain) — raise TrussMaxRounds")
     cur.select(col("a"), col("b"), col("support"))
   }
 

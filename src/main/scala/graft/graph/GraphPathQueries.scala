@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryPack, Tables}
+import graft.{Fixpoint, QueryPack, Tables}
 
 /** Path / traversal operators over the co-purchase graph — bounded-hop
   * BFS, bounded-round Bellman-Ford SSSP, and the Borůvka minimum
@@ -209,7 +209,7 @@ object GraphPathQueries extends QueryPack {
   /** Hard cap on Borůvka rounds for [[mstOf]] — component count at least
     * halves per round, so log2(n) bounds it; the loop exits as soon as no
     * cross-component edge remains (typical: far fewer rounds), and the
-    * cap THROWS rather than ship a partial forest (DedupClusters policy).
+    * cap THROWS rather than ship a partial forest ([[graft.Fixpoint]]).
     * The oracle unrolls this many rounds — extra rounds are no-ops once
     * the forest spans, so early exit and the full unroll agree.
     */
@@ -238,35 +238,16 @@ object GraphPathQueries extends QueryPack {
   def mstOf(edgesW: DataFrame,
       checkpointDir: Option[String] = None): DataFrame = {
     import graft.CacheScope.persisted
-    // Iteration state rides EAGER checkpoints, the DedupClusters storage
-    // discipline: two cache-chained variants of this loop (quotient
-    // contraction; cached edge cleanup) each measured ~6x SLOWER than
-    // re-joining the full graph every round, because chained lazy caches
+    // Iteration state rides EAGER checkpoints ([[graft.Fixpoint]]): two
+    // cache-chained variants of this loop (quotient contraction; cached
+    // edge cleanup) each measured ~6x SLOWER than re-joining the full
+    // graph every round, because chained lazy caches
     // recompute under the fixpoint's repeated references — see PLANS.md.
     // With the surviving-cross-edge set checkpoint-TRUNCATED per round,
     // the classic Borůvka cleanup finally pays: the candidate relation
     // shrinks geometrically (1.2M -> cross-component remnant) and later
     // rounds join the remnant, not the graph (16.6s -> measured below).
-    val sc = edgesW.sparkSession.sparkContext
-    val mstLog = org.slf4j.LoggerFactory.getLogger(getClass)
-    def timed[T](what: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      mstLog.info(f"[graft] mst $what%-14s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    // Explicit argument wins; else a dir already installed via
-    // sc.setCheckpointDir (the normal cluster deployment shape); only
-    // when neither resolves does local mode become a requirement.
-    val reliableDir =
-      graft.dedup.DedupClusters.resolveReliableDir(sc, checkpointDir)
-    val master = sc.master
-    require(reliableDir.isDefined || master.startsWith("local"),
-      s"mstOf: master '$master' is not local — pass checkpointDir= (or " +
-        "sc.setCheckpointDir) a shared-filesystem path " +
-        "(localCheckpoint blocks die with their executor)")
-    def pin(df: DataFrame): DataFrame =
-      if (reliableDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+    val pin = new Fixpoint.Pinner(edgesW.sparkSession.sparkContext, checkpointDir)
     val und0 = persisted(edgesW.filter(col("src") < col("dst"))
       .select(col("src"), col("dst"), col("w")))
     val nodes = persisted(und0.select(col("src").as("node"))
@@ -300,9 +281,8 @@ object GraphPathQueries extends QueryPack {
     var und = und0
     var lbl = nodes.select(col("node"), col("node").as("comp"))
     var chosen: DataFrame = und0.filter(lit(false))
-    var done = false
-    var first = true
-    for (_ <- 1 to MstRounds if !done) {
+    Fixpoint.until("mstOf Borůvka", MstRounds) { round =>
+      val first = round == 1
       // Round 1 shortcut (r16): the initial labels are the IDENTITY
       // (comp == node) and src < dst everywhere, so the two label joins
       // keep every edge and the checkpoint of the full edge relation
@@ -315,12 +295,12 @@ object GraphPathQueries extends QueryPack {
       val cross =
         if (first) und0.select(col("src"), col("dst"), col("w"),
           col("src").as("ca"), col("dst").as("cb"))
-        else timed("cross")(pin(und
+        else pin(und
           .join(lblSide(lbl.select(col("node").as("src"), col("comp").as("ca"))),
             "src")
           .join(lblSide(lbl.select(col("node").as("dst"), col("comp").as("cb"))),
             "dst")
-          .filter(col("ca") =!= col("cb"))))
+          .filter(col("ca") =!= col("cb")))
       // Borůvka edge cleanup: an intra-component edge can never be
       // picked later, so the surviving cross-component edges ARE the
       // next round's candidate set (checkpoint-truncated above; in
@@ -332,17 +312,17 @@ object GraphPathQueries extends QueryPack {
       // arrives with the component pair the relabel below needs.
       val e = struct(col("w"), col("src"), col("dst"),
         col("ca"), col("cb"))
-      val pickedM = timed("pickedM")(rebase(
+      val pickedM = rebase(
         cross.select(col("ca").as("comp"), e.as("e"))
         .unionByName(cross.select(col("cb").as("comp"), e.as("e")))
         .groupBy(col("comp")).agg(min(col("e")).as("m"))
         .select(col("comp"), col("m.src").as("src"),
           col("m.dst").as("dst"), col("m.w").as("w"),
-          col("m.ca").as("ca"), col("m.cb").as("cb"))))
+          col("m.ca").as("ca"), col("m.cb").as("cb")))
       // Every cross edge lands in some component's group, so pickedM is
       // empty iff cross is — the done probe rides the tiny pinned comp
       // relation instead of a separate job over the edge relation (r16).
-      if (timed("isEmpty")(pickedM.isEmpty)) done = true
+      if (pickedM.isEmpty) true
       else {
         // No pin: every union arm is an already-pinned pickedM projection,
         // so the lazy union can never recompute expensive lineage, and
@@ -365,7 +345,7 @@ object GraphPathQueries extends QueryPack {
         // distinct merged groups have disjoint members hence distinct
         // roots — so the chosen-edge relation, the only output, is
         // bit-identical to the from-scratch variant.
-        val p: DataFrame = if (small) timed("contract") {
+        val p: DataFrame = if (small) {
           // One single-partition task: union-find with path compression
           // and union-by-min (always hang the LARGER root under the
           // smaller), so the emitted root IS the min member — gated by
@@ -400,21 +380,16 @@ object GraphPathQueries extends QueryPack {
           var pj = pickedM.select(col("comp").as("c"),
             when(col("ca") === col("comp"), col("cb")).otherwise(col("ca"))
               .as("p"))
-          var stable = false
-          var jumps = 0
-          while (!stable) {
-            jumps += 1
-            if (jumps > 40) throw new IllegalStateException(
-              "mstOf: successor-graph contraction did not converge in 40 " +
-                "pointer jumps (2^40 exceeds any component count)")
+          // 40 jumps: 2^40 exceeds any component count.
+          Fixpoint.until("mstOf pointer jump", 40) { _ =>
             val nextP = when(col("b.p") === col("a.c"),
               least(col("a.c"), col("a.p"))).otherwise(col("b.p"))
-            val j = timed(s"jump$jumps")(rebase(
+            val j = rebase(
               pj.as("a").join(pj.as("b"), col("a.p") === col("b.c"))
               .select(col("a.c").as("c"), nextP.as("p"),
-                (nextP =!= col("a.p")).as("chg"))))
-            stable = timed(s"jchk$jumps")(j.filter(col("chg")).isEmpty)
+                (nextP =!= col("a.p")).as("chg")))
             pj = j.select(col("c"), col("p"))
+            j.filter(col("chg")).isEmpty
           }
           pj
         }
@@ -422,15 +397,12 @@ object GraphPathQueries extends QueryPack {
         // contraction; comps finished in earlier rounds (absent from the
         // successor graph) keep their labels — they produce no cross
         // edges ever again, so staleness is unobservable.
-        lbl = timed("lbl")(rebase(
+        lbl = rebase(
           lbl.join(lblSide(p), col("comp") === col("c"), "left")
-          .select(col("node"), coalesce(col("p"), col("comp")).as("comp"))))
+          .select(col("node"), coalesce(col("p"), col("comp")).as("comp")))
+        false
       }
-      first = false
     }
-    if (!done) throw new IllegalStateException(
-      s"mstOf: forest not spanning after $MstRounds Borůvka rounds — " +
-        "raise GraphQueries.MstRounds (log2(n) bounds the need)")
     chosen
   }
 
@@ -478,20 +450,11 @@ object GraphPathQueries extends QueryPack {
       checkpointDir: Option[String] = None): DataFrame = {
     import graft.CacheScope.persisted
     import org.apache.spark.sql.types.DecimalType
-    // Iteration state rides EAGER checkpoints, the mstOf/DedupClusters
-    // storage discipline: with plain persisted() chains the backward
-    // pass's re-references recomputed the forward layers every round
-    // (measured 46s at sf0.1; checkpoint-truncated: see PLANS.md r11).
-    val sc = edgesDf.sparkSession.sparkContext
-    val reliableDir =
-      graft.dedup.DedupClusters.resolveReliableDir(sc, checkpointDir)
-    val master = sc.master
-    require(reliableDir.isDefined || master.startsWith("local"),
-      s"betweennessOf: master '$master' is not local — pass checkpointDir= " +
-        "(or sc.setCheckpointDir) a shared-filesystem path")
-    def pin(df: DataFrame): DataFrame =
-      if (reliableDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+    // Iteration state rides EAGER checkpoints ([[graft.Fixpoint]]): with
+    // plain persisted() chains the backward pass's re-references
+    // recomputed the forward layers every round (measured 46s at sf0.1;
+    // checkpoint-truncated: see PLANS.md r11).
+    val pin = new Fixpoint.Pinner(edgesDf.sparkSession.sparkContext, checkpointDir)
     val e = persisted(edgesDf.select(col("src"), col("dst")))
     val seeds = e.select(col("src")).distinct()
       .filter(col("src") % BetweennessSeedMod === 0)

@@ -158,7 +158,7 @@ object GraphQueries extends QueryPack {
     // seeds' expanding basin is bit-identical (zero-rank sources
     // contribute exactly 0, absent contributions coalesce to 0, the
     // final filter dropped r = 0 rows anyway) but measured 3x SLOWER
-    // (PprProbe, sf0.1, n=2 each, interleaved: pruned 8.02/7.62 s vs
+    // (sf0.1, n=2 each, interleaved: pruned 8.02/7.62 s vs
     // unpruned 2.60/2.95 s) — the per-round Filter above the left join
     // degrades the rank side's join planning without buying coverage,
     // because the basin SATURATES after one round at this degree:

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Fixpoint
+
 /** k-core decomposition by iterative peeling: repeatedly delete every
   * node whose degree in the surviving subgraph is below k; what remains
   * is the (maximal) k-core, and each member's degree within it is its
@@ -20,29 +22,13 @@ import org.apache.spark.sql.functions._
   * graphs (this one: per-order cliques of <= 7 parts) confirm in a
   * handful of rounds. Nothing but scalar counts ever reaches the driver.
   *
-  * Convergence policy is the [[graft.dedup.DedupClusters]] discipline:
-  * the loop stops only on a CONFIRMED fixpoint — a round that removes
-  * zero nodes — and `maxRounds` is a hard-fail guard (a partially peeled
-  * "core" silently includes nodes the real core excludes, which is data
-  * corruption for any consumer). `strict = false` is the documented
-  * opt-out that downgrades exhaustion to a WARN.
+  * Convergence policy is the [[graft.Fixpoint]] discipline: the loop
+  * stops only on a CONFIRMED fixpoint — a round that removes zero nodes —
+  * and `maxRounds` is a hard-fail guard (a partially peeled "core"
+  * silently includes nodes the real core excludes, which is data
+  * corruption for any consumer).
   */
 object KCore {
-
-  /** The k-core of a symmetric directed (src, dst) edge relation.
-    * Returns (node, core_deg) for every node in the core; empty result if
-    * the graph has no k-core. Adversarial worst case for `maxRounds`: a
-    * path graph at k = 2 peels only its two endpoints per round — depth
-    * O(n/2) — which is why exhaustion must throw rather than return the
-    * half-peeled set.
-    */
-  /** Target edges per state partition: iterative state wants FEW, FULL
-    * partitions (the DedupClusters sizing) — at tested SFs the windowed
-    * graph collapses to 1-2 partitions and each peel round is a handful
-    * of small tasks instead of 32 near-empty ones; at 100 TB the same
-    * rule yields thousands of right-sized tasks.
-    */
-  val EdgesPerPartition = 500000L
 
   /** Partition-local peel over one partition's edges (src-partitioned,
     * symmetric graph): within a partition every src node's FULL edge list
@@ -83,31 +69,25 @@ object KCore {
     edges.iterator.filter { case (s, t) => !removed(s) && !removed(t) }
   }
 
+  /** The k-core of a symmetric directed (src, dst) edge relation.
+    * Returns (node, core_deg) for every node in the core; empty result if
+    * the graph has no k-core. Adversarial worst case for `maxRounds`: a
+    * path graph at k = 2 peels only its two endpoints per round — depth
+    * O(n/2) — which is why exhaustion must throw rather than return the
+    * half-peeled set.
+    *
+    * Each round's state is an EAGER checkpoint ([[graft.Fixpoint]]), so
+    * every round starts from stored blocks with O(1) lineage — a deep peel
+    * no longer drags a rounds-deep plan through the optimizer each round
+    * (VERDICT r8 "What's wrong #3"), and an upstream unpersist can never
+    * force a silent full recompute.
+    */
   def kcore(edges: DataFrame, k: Int, maxRounds: Int = 30,
-      strict: Boolean = true, seedLocal: Boolean = true,
+      seedLocal: Boolean = true,
       checkpointDir: Option[String] = None): DataFrame = {
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    // Iterative-state storage is the [[graft.dedup.DedupClusters]]
-    // pin-and-truncate discipline, not a persist chain: each round's
-    // state is an EAGER checkpoint, so every round starts from stored
-    // blocks with O(1) lineage — a deep peel no longer drags a
-    // rounds-deep plan through the optimizer each round (VERDICT r8
-    // "What's wrong #3"), and an upstream unpersist can never force a
-    // silent full recompute. Same cluster-safety rule as DedupClusters:
-    // localCheckpoint blocks die with their executor, so a non-local
-    // master requires a reliable `checkpointDir`.
-    val reliableDir = graft.dedup.DedupClusters.resolveReliableDir(
-      edges.sparkSession.sparkContext, checkpointDir)
-    graft.dedup.DedupClusters.requireClusterSafe(
-      edges.sparkSession.sparkContext.master, reliableDir)
-    def pin(df: DataFrame): DataFrame =
-      if (reliableDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+    val pin = new Fixpoint.Pinner(edges.sparkSession.sparkContext, checkpointDir)
     val e0 = edges.transform(graft.CacheScope.persisted(_))
-    val m = e0.count()
-    val parts = math.max(1, math.min(
-      e0.sparkSession.sparkContext.defaultParallelism,
-      (m / EdgesPerPartition).toInt + 1))
+    val parts = Fixpoint.stateParts(e0.sparkSession.sparkContext, e0.count())
     val ePart = e0.repartition(parts, col("src"))
     var e = pin(if (seedLocal) {
       import e0.sparkSession.implicits._
@@ -115,37 +95,22 @@ object KCore {
         .mapPartitions(localPeel(k)).toDF("src", "dst")
     } else ePart)
     var survivors: DataFrame = null
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
+    Fixpoint.until("KCore.kcore", maxRounds) { _ =>
       // ONE action per round: the eager pin materializes the degree agg
       // (referenced by the convergence count AND the survivor filter),
       // and the count of sub-k nodes decides convergence (zero removed =
       // a confirmed fixpoint — every degree was computed within the
       // surviving set).
       val deg = pin(e.groupBy("src").agg(count(lit(1)).as("core_deg")))
-      val nRemoved = deg.filter(col("core_deg") < k).count()
-      if (nRemoved == 0) {
-        converged = true
+      if (deg.filter(col("core_deg") < k).count() == 0) {
         survivors = deg
+        true
       } else {
         val s = deg.filter(col("core_deg") >= k).select(col("src").as("node"))
         e = pin(e.join(s, col("src") === col("node"), "left_semi")
           .join(s, col("dst") === col("node"), "left_semi"))
+        false
       }
-      log.info(s"[graft] kcore round $round: removed $nRemoved")
-    }
-    if (!converged) {
-      val msg = s"KCore did not reach a confirmed fixpoint in $maxRounds " +
-        "rounds; the surviving set still contains sub-k nodes — raise " +
-        "maxRounds (depth is bounded by the peeling depth, not node count) " +
-        "or pass strict=false to accept the partial core"
-      if (strict) throw new IllegalStateException(msg) else log.warn(msg)
-      // strict=false opt-out: the partial core is the degree aggregation
-      // over the last surviving edge set (sub-k stragglers included, as
-      // documented) — `survivors` is only assigned on the converged path.
-      survivors = e.groupBy("src").agg(count(lit(1)).as("core_deg"))
     }
     survivors.select(col("src").as("node"), col("core_deg"))
   }

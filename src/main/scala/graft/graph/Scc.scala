@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Fixpoint
+
 /** Strongly connected components over a DIRECTED edge relation — the
   * directed sibling of [[graft.dedup.DedupClusters]] (whose min-label
   * fixpoint is only correct for undirected connectivity). Algorithm:
@@ -13,8 +15,8 @@ import org.apache.spark.sql.functions._
   * composition):
   *
   * phase 0 — CONTRACT: each partition runs iterative Tarjan over its own
-  * edges (the DedupClusters union-find-seed discipline: bounded at the
-  * ~500k-edges-per-partition state sizing, the one place imperative
+  * edges (the DedupClusters union-find-seed discipline: bounded by the
+  * [[graft.Fixpoint.stateParts]] sizing, the one place imperative
   * per-partition code beats a relational formulation). A cycle that lives
   * inside one partition is mutually reachable globally too, so local SCCs
   * contract soundly; the quotient graph's SCCs pull back exactly. When
@@ -45,13 +47,11 @@ import org.apache.spark.sql.functions._
   *      coloring direction); survivors recolor next peel, now
   *      unobstructed by the removed upstream colorers.
   *
-  * Budgets: both fixpoints and the peel loop are hard-capped and THROW on
-  * exhaustion (the DedupClusters discipline — partially propagated labels
-  * are silent corruption for every consumer). Storage: every iteration
-  * state is eagerly checkpointed (reliable dir on non-local masters via
-  * [[graft.dedup.DedupClusters.resolveReliableDir]], localCheckpoint
-  * otherwise) and coalesced to a handful of partitions — the state is
-  * node-sized, a sliver of the edge relation.
+  * Budgets and storage are [[graft.Fixpoint]]'s: both fixpoints and the
+  * peel loop are hard-capped and THROW on exhaustion (partially propagated
+  * labels are silent corruption for every consumer), and every iteration
+  * state is eagerly pinned and coalesced to a handful of partitions — the
+  * state is node-sized, a sliver of the edge relation.
   *
   * Scale shape: every step is an equi-join edges↔labels plus one
   * aggregate — the Pregel lowering, same as pagerankOf; nothing is ever
@@ -69,22 +69,14 @@ object Scc {
       confirmBudget: Int = 64, checkpointDir: Option[String] = None,
       stateParts: Option[Int] = None): DataFrame = {
     val ss = edgesDf.sparkSession
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    val reliableDir = graft.dedup.DedupClusters.resolveReliableDir(
-      ss.sparkContext, checkpointDir)
-    graft.dedup.DedupClusters.requireClusterSafe(
-      ss.sparkContext.master, reliableDir)
-    def pin(df: DataFrame): DataFrame =
-      if (reliableDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+    val pin = new Fixpoint.Pinner(ss.sparkContext, checkpointDir)
     // State relations are node-sized; shuffle-partition fan-out is pure
-    // scheduler overhead at that size (the DedupClusters nState rule).
+    // scheduler overhead at that size (the Fixpoint.stateParts rule).
     val e0 = pin(edgesDf.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst")).distinct()
       .coalesce(math.max(1, ss.sparkContext.defaultParallelism / 4)))
     val nEdges0 = e0.count()
-    val nState = stateParts.getOrElse(math.max(1L, math.min(
-      ss.sparkContext.defaultParallelism.toLong, nEdges0 / 500000L)).toInt)
+    val nState = stateParts.getOrElse(Fixpoint.stateParts(ss.sparkContext, nEdges0))
     def pinState(df: DataFrame): DataFrame = pin(df.coalesce(nState))
 
     // Isolated self-loop-only nodes never enter the contracted graph; fold
@@ -169,7 +161,6 @@ object Scc {
 
     if (nState == 1) {
       // The local pass saw every edge: its components are the global SCCs.
-      log.info("[graft] scc: single-partition Tarjan fast path (no loop)")
       return allNodes.join(local.withColumnRenamed("node", "dn"),
           col("node") === col("dn"), "left")
         .select(col("node"), coalesce(col("lid"), col("node")).as("scc_id"))
@@ -194,9 +185,9 @@ object Scc {
       done = if (done == null) d else pinState(done.union(d))
     }
 
-    var peel = 0
     var nLeft = nodes.count()
-    while (nLeft > 0 && peel < peelBudget) {
+    if (nLeft > 0) Fixpoint.until("Scc peel", peelBudget) { round =>
+      val peel = round - 1
       // 1. TRIM: a node absent from src (no out-edges) or absent from dst
       // (no in-edges) cannot be on any cycle — singleton SCC.
       val trimmed = nodes
@@ -231,9 +222,7 @@ object Scc {
         def extreme(c: org.apache.spark.sql.Column*) =
           if (useMax) greatest(c: _*) else least(c: _*)
         var colors = pinState(nodes.select(col("node"), col("node").as("c")))
-        var stable = false
-        var it = 0
-        while (!stable && it < colorBudget) {
+        Fixpoint.until(s"Scc color (peel $peel)", colorBudget) { _ =>
           val inExt = edges.join(colors, edges("src") === colors("node"))
             .groupBy(col("dst"))
             .agg((if (useMax) max(col("c")) else min(col("c"))).as("in_c"))
@@ -247,13 +236,9 @@ object Scc {
               col("l.c") === col("r.rn"), "left")
             .select(col("l.node").as("node"), col("l.prev").as("prev"),
               extreme(col("l.c"), coalesce(col("rc"), col("l.c"))).as("c")))
-          stable = doubled.filter(col("c") =!= col("prev")).limit(1).isEmpty
           colors = doubled.drop("prev")
-          it += 1
+          doubled.filter(col("c") =!= col("prev")).limit(1).isEmpty
         }
-        if (!stable) throw new IllegalStateException(
-          s"Scc: color fixpoint unconfirmed after $colorBudget iterations " +
-            s"(peel $peel) — raise colorBudget (convergence is O(diameter))")
         // 3. CONFIRM: backward reachability from roots within each color.
         // `reached` accumulates SCC members; the frontier is the last
         // round's additions only, so work tracks the SCC sizes.
@@ -266,9 +251,7 @@ object Scc {
           .select(col("src"), col("dst"), col("src_c").as("c")))
         var reached = pinState(colors.filter(col("node") === col("c")))
         var frontier = reached
-        var grew = true
-        var cit = 0
-        while (grew && cit < confirmBudget) {
+        Fixpoint.until(s"Scc confirm (peel $peel)", confirmBudget) { _ =>
           val step = sameColor
             .join(frontier.select(col("node").as("fn"), col("c").as("fc")),
               sameColor("dst") === col("fn") && sameColor("c") === col("fc"))
@@ -277,16 +260,13 @@ object Scc {
           val fresh = pinState(step.join(
             reached.select(col("node").as("rn"), col("c").as("rc")),
             step("node") === col("rn") && step("c") === col("rc"), "left_anti"))
-          if (fresh.limit(1).isEmpty) grew = false
+          if (fresh.limit(1).isEmpty) true
           else {
             reached = pinState(reached.union(fresh))
             frontier = fresh
+            false
           }
-          cit += 1
         }
-        if (grew) throw new IllegalStateException(
-          s"Scc: backward confirmation unconfirmed after $confirmBudget " +
-            s"iterations (peel $peel) — raise confirmBudget")
         // 4. PEEL confirmed SCCs. Under max-coloring the color IS the max
         // member id; under min-coloring it's the min — relabel through one
         // bounded group-agg so scc_id is always the MAX member id (the
@@ -301,14 +281,9 @@ object Scc {
           .join(reached.select(col("node").as("md")),
             edges("dst") === col("md"), "left_anti"))
         nLeft = nodes.count()
-        log.info(s"[graft] scc peel $peel: colored in $it rounds, " +
-          s"confirmed in $cit, $nLeft nodes left")
       }
-      peel += 1
+      nLeft == 0
     }
-    if (nLeft > 0) throw new IllegalStateException(
-      s"Scc: $nLeft nodes unresolved after $peelBudget peels — raise " +
-        "peelBudget (each peel removes every confirmed root component)")
     // Compose: node -> local label -> condensed scc label. A local
     // component with no surviving condensed edge (its SCC closed inside
     // one partition) never enters the loop — its lid IS the answer; a

@@ -90,7 +90,8 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
 }
 
 /** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Registered by
-  * [[GraftExtensions]] (config-wired sessions) and idempotently by
+  * [[graft.plans.GraftExtensions]] (config-wired sessions:
+  * `spark.sql.extensions=graft.plans.GraftExtensions`) and idempotently by
   * [[AsOfJoin.asof]] via `experimental.extraStrategies` (code-wired).
   */
 object AsOfJoinStrategy extends SparkStrategy {

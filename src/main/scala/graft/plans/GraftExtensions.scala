@@ -1,11 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.functions.StemExpr
+import graft.functions.{GraftFunctions, StemExpr}
 
 /** Catalyst optimizer rule: Porter stemming is IDEMPOTENT
   * (stem(stem(x)) = stem(x) — the stemmer's output is always a fixpoint
@@ -35,18 +36,28 @@ object CollapseIdempotentStem extends Rule[LogicalPlan] {
   *
   *   spark.sql.extensions=graft.plans.GraftExtensions
   *
-  * Injects [[CollapseIdempotentStem]] into the optimizer and
-  * [[AsOfJoinStrategy]] into the planner. (The SQL function surface —
-  * porter_stem, dot_q — stays in `GraftFunctions.register`, which works
-  * on any session; sessions built with this extension class get the
-  * optimizer rewrite and the native as-of operator on top.)
-  * ExtensionsSpec drives both wiring paths: a fresh session built
-  * through this class, and `experimental.extraOptimizations` /
-  * `experimental.extraStrategies` on an existing one.
+  * Injects [[CollapseIdempotentStem]] into the optimizer,
+  * [[AsOfJoinStrategy]] into the planner, and every SQL function in
+  * `GraftFunctions.All` (porter_stem, dot_q, dct16) into the function
+  * registry. `GraftFunctions.register` remains the per-session path for
+  * sessions built without this class. ExtensionsSpec drives both optimizer
+  * wiring paths (a fresh session built through this class, and
+  * `experimental.extraOptimizations` / `experimental.extraStrategies` on
+  * an existing one); SourcesSpec loads the class reflectively, as the
+  * conf does, and calls the injected functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => CollapseIdempotentStem)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    // ExpressionInfo's 5-arg ctor is (className, db, name, usage, extended):
+    // the implementing class and a null db, so DESCRIBE FUNCTION reports
+    // the real class instead of a bogus database.
+    GraftFunctions.All.foreach { case (name, builder, usage, clazz) =>
+      e.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(clazz, null, name, usage, ""),
+        builder))
+    }
   }
 }

@@ -225,11 +225,14 @@ class DedupSimSpec extends SparkSpec {
       s"leaked temp edge dirs: ${clusterDirs -- before}")
     // The guard is a pure function of (master, checkpointDir) — testable
     // without standing up a cluster.
-    intercept[IllegalArgumentException] {
-      DedupClusters.requireClusterSafe("spark://host:7077", None)
-    }
-    DedupClusters.requireClusterSafe("spark://host:7077", Some("/shared/ck"))
-    DedupClusters.requireClusterSafe("local[32]", None)
+    // local-cluster runs executors in separate JVMs, so it needs a
+    // shared checkpoint dir just like a real cluster.
+    for (master <- Seq("spark://host:7077", "local-cluster[2,2,1024]"))
+      intercept[IllegalArgumentException] {
+        Fixpoint.requireClusterSafe(master, None)
+      }
+    Fixpoint.requireClusterSafe("spark://host:7077", Some("/shared/ck"))
+    Fixpoint.requireClusterSafe("local[32]", None)
   }
 
   test("approximate DF stays within the advertised error of exact") {

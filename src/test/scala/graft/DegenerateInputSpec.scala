@@ -43,12 +43,11 @@ class DegenerateInputSpec extends SparkSpec {
   test("resolveReliableDir: explicit dir wins; local master ignores session dir") {
     val sc = spark.sparkContext
     val dir = Files.createTempDirectory("graft-ckpt-resolve").toString
-    assert(graft.dedup.DedupClusters.resolveReliableDir(sc, Some(dir))
-      .contains(dir))
+    assert(Fixpoint.resolveReliableDir(sc, Some(dir)).contains(dir))
     assert(sc.getCheckpointDir.isDefined, "explicit dir not installed")
     // A local master with no explicit argument stays on localCheckpoint
     // even though the session now carries a checkpoint dir — parallel
     // suites must not have their iteration state silently re-routed.
-    assert(graft.dedup.DedupClusters.resolveReliableDir(sc, None).isEmpty)
+    assert(Fixpoint.resolveReliableDir(sc, None).isEmpty)
   }
 }

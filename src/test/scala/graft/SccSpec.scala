@@ -92,4 +92,15 @@ class SccSpec extends SparkSpec {
     assert((1L to 10L).forall(exact(_) == 10L)) // the merged double ring
     assert(Seq(30L, 20L, 11L, 40L).forall(i => exact(i) == i))
   }
+
+  test("exhausting the peel budget throws instead of returning partial labels") {
+    // The decreasing chain needs a max peel and a min peel (see above);
+    // one peel confirms only the head's singleton, so a budget of one
+    // must hard-fail on the forced distributed loop.
+    val chain = edges((2L to 12L).map(i => i -> (i - 1)): _*)
+    val ex = intercept[IllegalStateException] {
+      Scc.sccOf(chain, peelBudget = 1, stateParts = Some(3))
+    }
+    assert(ex.getMessage.contains("confirmed fixpoint"))
+  }
 }

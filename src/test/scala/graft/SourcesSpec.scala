@@ -135,7 +135,7 @@ class SourcesSpec extends SparkSpec {
       // conf applied only at SparkContext creation, so the test drives the
       // same hook the conf path uses: reflective zero-arg instantiation
       // (Spark's loader contract) + builder.withExtensions.
-      val ext = Class.forName("graft.functions.GraftExtensions")
+      val ext = Class.forName("graft.plans.GraftExtensions")
         .getDeclaredConstructor().newInstance()
         .asInstanceOf[org.apache.spark.sql.SparkSessionExtensions => Unit]
       val s2 = SparkSession.builder().withExtensions(ext).getOrCreate()

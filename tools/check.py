@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: for each dumped query
 result, run the oracle SQL in DuckDB over the same sf dir and compare
-(sorted rows, columns sorted by name). Usage: check.py <sfdir> <outdir>"""
+(sorted rows, columns sorted by name). An oracle_sql.json key with no
+result directory counts as a FAIL. Exits 1 on any FAIL.
+Usage: check.py <sfdir> <outdir>"""
 import sys, json, glob, os
 import duckdb, pandas as pd
 
@@ -10,9 +12,14 @@ con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-names = sorted([os.path.basename(p) for p in glob.glob(f"{outdir}/*") if os.path.isdir(p)])
+dumped = {os.path.basename(p) for p in glob.glob(f"{outdir}/*") if os.path.isdir(p)}
+# Every oracle key must have a result: a key Verify failed to dump is a FAIL,
+# not a key the gate quietly skips.
+names = sorted(dumped | set(oracle))
 fails = 0
 for name in names:
+    if name not in dumped:
+        print(f"FAIL {name}: no output directory"); fails += 1; continue
     try:
         got = pd.read_parquet(f"{outdir}/{name}")
     except Exception as e:
