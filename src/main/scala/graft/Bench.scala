@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: per-query MEDIAN over n runs (default 3) so
   * round-over-round deltas aren't n=1 JVM noise. Caches registered through
@@ -79,33 +79,39 @@ object Bench {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    // Untimed warm-up pass (see scaladoc). Same cache discipline as the
-    // timed runs: build, count, release. In isolated mode the warm-up
-    // happens per-query inside the fresh session instead.
-    if (!isolated) selected.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => }
-      CacheScope.releaseAll()
+    // One build + count of a key, releasing its pins after the clock
+    // stops. A key that throws is FAILED, never timed: its first error goes
+    // to stderr, it is skipped for the rest of the run, listed under
+    // "failed" in both JSON records, and the run exits 1 after teardown.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def run(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        if (failed.add(name)) System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      } finally CacheScope.releaseAll()
     }
-    val results = selected.map { case (name, fn) =>
-      if (isolated) {
+    // Untimed warm-up pass (see scaladoc). In isolated mode the warm-up
+    // happens per-query inside the fresh session instead.
+    if (!isolated) selected.foreach { case (name, fn) => run(name, fn) }
+    val results = selected.flatMap { case (name, fn) =>
+      if (isolated && !failed(name)) {
         spark.stop()
         LabelsMemo.clear()
         spark = newSession()
-        try fn(spark, sfDir).count() catch { case _: Throwable => }
-        CacheScope.releaseAll()
+        run(name, fn)
       }
-      val times = (1 to n).map { _ =>
+      val times = (1 to n).iterator.takeWhile(_ => !failed(name)).flatMap { _ =>
         if (memoCold) LabelsMemo.clear()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        CacheScope.releaseAll()
-        dt
-      }
-      (name, median(times), times.min)
+        run(name, fn)
+      }.toVector
+      if (failed(name)) None else Some((name, median(times), times.min))
     }
     def jmap(xs: Seq[(String, Double)]): String =
       xs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    def jlist(xs: Iterable[String]): String =
+      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     // Per-query MIN alongside the median (VERDICT r3 #4): post-warm-up,
     // a big median-vs-min gap flags run-to-run variance, not a plan issue.
@@ -125,7 +131,7 @@ object Bench {
       case (false, false) => "suite"
     }
     val fullJson =
-      f"""{"metric":"total","value":$total%.3f,"value_min":$totalMin%.3f,"unit":"sec","n":$n,"stat":"median","mode":"$mode","queries":${jmap(results.map(r => r._1 -> r._2))},"queries_min":${jmap(results.map(r => r._1 -> r._3))},"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"value_min":$totalMin%.3f,"unit":"sec","n":$n,"stat":"median","mode":"$mode","queries":${jmap(results.map(r => r._1 -> r._2))},"queries_min":${jmap(results.map(r => r._1 -> r._3))},"failed":${jlist(failed)},"sf":"$sfDir"}"""
     // Written to BOTH the scratch target/ and the git-tracked bench/ dir:
     // BENCH_r06's stdout-tail truncation destroyed the r6 per-query
     // record, so the full maps must live somewhere the round commit
@@ -157,12 +163,17 @@ object Bench {
     val headline = results.filter(r => anchors(r._1) || slowest(r._1))
       .map(r => r._1 -> r._2)
     val json =
-      f"""{"metric":"total","value":$total%.3f,"value_min":$totalMin%.3f,"unit":"sec","n":$n,"stat":"median","mode":"$mode","n_queries":${results.size},"queries":${jmap(headline)},"families":${jmap(families)},"detail":"${outFiles.head}","sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"value_min":$totalMin%.3f,"unit":"sec","n":$n,"stat":"median","mode":"$mode","n_queries":${results.size},"queries":${jmap(headline)},"families":${jmap(families)},"n_failed":${failed.size},"failed":${jlist(failed.take(16))},"detail":"${outFiles.head}","sf":"$sfDir"}"""
     println(json)
     // Teardown hatch: reclaim scopes orphaned by any worker thread (safe
     // here — the harness is single-threaded and done with all queries).
     CacheScope.releaseAllScopes()
     LabelsMemo.clear()
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} key(s) failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

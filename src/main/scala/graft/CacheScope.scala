@@ -94,13 +94,6 @@ object CacheScope {
       p
     }
 
-  /** Alias of [[persisted]], kept for callers written against the r12
-    * already-pinned-input API; idempotence now lives in [[persisted]]
-    * itself, so the two are the same operation.
-    */
-  def persistedOnce(df: DataFrame, level: StorageLevel = DefaultLevel): DataFrame =
-    persisted(df, level)
-
   /** Register an arbitrary teardown action with THIS thread's scope — e.g.
     * deleting a scratch checkpoint dir whose files back the query's result
     * until the consumer drains it. Runs at the scope's next [[releaseAll]],

@@ -28,9 +28,9 @@ object Fixpoint {
 
   /** Driver and executors share one JVM. `local-cluster[...]` starts its
     * executors as separate JVMs, so it counts as a cluster for both
-    * decisions below.
+    * decisions below (and for LayoutQueries' scratch-dir guard).
     */
-  private def singleJvm(master: String): Boolean =
+  private[graft] def singleJvm(master: String): Boolean =
     master.startsWith("local") && !master.startsWith("local-cluster")
 
   /** The default (no checkpoint dir) storage paths are node-local:

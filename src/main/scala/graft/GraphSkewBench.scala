@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.graph.Kernels
+
 /** Dev harness: measure the degree-ordered triangle orientation and the
   * PageRank fixpoint on a PLANTED power-law graph, so the "survives hubs
   * at 100x" claim for `GraphQueries.trianglesOf` is measured, not argued
@@ -18,9 +20,9 @@ import org.apache.spark.sql.functions._
   *
   * Measured per N: edge count m, wall time of the full per-node triangle
   * count, the max ORIENTED out-degree vs the sqrt(2m) bound the
-  * orientation guarantees, and (at the smallest N) the same computation
-  * under a naive id-ordered orientation — whose hub adjacency array is
-  * the quadratic blow-up the degree ordering exists to prevent.
+  * orientation guarantees, and the same count under a naive id-ordered
+  * orientation — whose hub adjacency array is the quadratic blow-up the
+  * degree ordering exists to prevent.
   */
 object GraphSkewBench {
 
@@ -42,17 +44,9 @@ object GraphSkewBench {
     * adjacency as out-neighbors — the shape that melts on power-law
     * graphs. Same apex-intersection downstream as trianglesOf.
     */
-  def naiveTriangles(edgesDf: DataFrame): DataFrame = {
-    val o = edgesDf.filter(col("src") < col("dst"))
-      .transform(CacheScope.persisted(_))
-    val adj = o.groupBy("src").agg(array_sort(collect_list(col("dst"))).as("nbr"))
-      .transform(CacheScope.persisted(_))
-    val tri = o
-      .join(adj.select(col("src").as("u"), col("nbr").as("nu")), col("src") === col("u"))
-      .join(adj.select(col("src").as("v"), col("nbr").as("nv")), col("dst") === col("v"))
-      .select(explode(array_intersect(col("nu"), col("nv"))).as("w"))
-    tri.agg(count(lit(1)).as("n_triangles"))
-  }
+  def naiveTriangles(edgesDf: DataFrame): DataFrame =
+    Kernels.apexes(edgesDf.filter(col("src") < col("dst")))
+      .agg(count(lit(1)).as("n_triangles"))
 
   def main(args: Array[String]): Unit = {
     val maxN = args.headOption.map(_.toInt).getOrElse(100000)
@@ -63,56 +57,43 @@ object GraphSkewBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {
+      import graft.graph.GraphQueries.{pagerankOf, trianglesOf}
+      // One measured computation: (result, seconds), pins released after.
+      def timed[A](body: => A): (A, Double) = {
+        val t0 = System.nanoTime()
+        try (body, (System.nanoTime() - t0) / 1e9) finally CacheScope.releaseAll()
+      }
       // JIT/codegen warm-up so the first measured scale isn't charged the
       // whole JVM's compilation bill (Bench methodology, PLANS.md).
       {
         val w = divisorEdges(spark, 3000).persist()
-        w.count()
-        graft.graph.GraphQueries.trianglesOf(w).count()
-        CacheScope.releaseAll()
-        naiveTriangles(w).count()
-        CacheScope.releaseAll()
+        timed(trianglesOf(w).count())
+        timed(naiveTriangles(w).count())
         w.unpersist()
       }
       Seq(10000, 30000, maxN).distinct.filter(_ <= maxN).foreach { n =>
         val edges = divisorEdges(spark, n).persist()
         val m = edges.count() / 2
         // Degree-ordered production path (GraphQueries.trianglesOf).
-        val t0 = System.nanoTime()
-        val tris = graft.graph.GraphQueries.trianglesOf(edges)
-          .agg(sum(col("n_tri")).as("s")).collect().head.getLong(0) / 3
-        val dt = (System.nanoTime() - t0) / 1e9
-        CacheScope.releaseAll()
+        val (tris, dt) = timed(trianglesOf(edges)
+          .agg(sum(col("n_tri")).as("s")).collect().head.getLong(0) / 3)
         // Max oriented out-degree vs the sqrt(2m) guarantee.
-        val deg = edges.groupBy("src").agg(count(lit(1)).as("dg"))
-        val o = edges
-          .join(deg.select(col("src").as("s1"), col("dg").as("da")), col("src") === col("s1"))
-          .join(deg.select(col("src").as("s2"), col("dg").as("db")), col("dst") === col("s2"))
-          .filter(col("da") < col("db") ||
-            (col("da") === col("db") && col("src") < col("dst")))
-        val maxOut = o.groupBy("src").agg(count(lit(1)).as("od"))
+        val maxOut = Kernels.orient(edges)
+          .groupBy("src").agg(count(lit(1)).as("od"))
           .agg(max(col("od"))).collect().head.getLong(0)
-        val hubDeg = deg.agg(max(col("dg"))).collect().head.getLong(0)
+        val hubDeg = Kernels.degrees(edges)
+          .agg(max(col("dg"))).collect().head.getLong(0)
         println(f"[graphskew] n=$n%-7d m=$m%-8d hubDeg=$hubDeg%-6d " +
           f"maxOrientedOut=$maxOut%-5d sqrt2m=${math.sqrt(2.0 * m)}%7.1f " +
           f"triangles=$tris%-9d degree-ordered $dt%6.2f s")
         // Naive orientation at every scale — it is deliberately the
         // quadratic shape (hub keeps its whole adjacency as out-edges).
-        locally {
-          val t1 = System.nanoTime()
-          val naive = naiveTriangles(edges).collect().head.getLong(0)
-          val dn = (System.nanoTime() - t1) / 1e9
-          CacheScope.releaseAll()
-          println(f"[graphskew] n=$n%-7d naive id-ordered $dn%6.2f s " +
-            f"(triangles=$naive, must equal $tris)")
-          require(naive == tris, s"orientation mismatch: $naive != $tris")
-        }
+        val (naive, dn) = timed(naiveTriangles(edges).collect().head.getLong(0))
+        println(f"[graphskew] n=$n%-7d naive id-ordered $dn%6.2f s " +
+          f"(triangles=$naive, must equal $tris)")
+        require(naive == tris, s"orientation mismatch: $naive != $tris")
         // PageRank fixpoint on the same hub-heavy graph (5 iterations).
-        val t2 = System.nanoTime()
-        graft.graph.GraphQueries.pagerankOf(edges)
-          .agg(sum(col("pr_fixed"))).collect()
-        val dp = (System.nanoTime() - t2) / 1e9
-        CacheScope.releaseAll()
+        val (_, dp) = timed(pagerankOf(edges).agg(sum(col("pr_fixed"))).collect())
         println(f"[graphskew] n=$n%-7d pagerank(5 iters) $dp%6.2f s")
         edges.unpersist()
       }

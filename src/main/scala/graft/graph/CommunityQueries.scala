@@ -20,12 +20,12 @@ import graft.QueryPack
   *
   * Scale shapes: Louvain-move is two equi-joins + one min(struct)
   * aggregation (the lpaOf argmax discipline — no window); the double
-  * sweep is 2×[[GraphPathQueries.BfsRounds]] bounded-hop relaxations with
-  * the peripheral-node handoff staying IN-PLAN (a 1-row TakeOrdered
-  * relation, never a driver collect); the truss peel re-runs the
-  * degree-ordered oriented triangle join of [[GraphQueries.trianglesOf]]
-  * on a geometrically-shrinking edge set with eager-pinned rounds and the
-  * [[graft.dedup.DedupClusters]] fixpoint-or-throw contract.
+  * sweep is 2×[[GraphPathQueries.BfsRounds]] [[Kernels.minPlus]] rounds
+  * with the peripheral-node handoff staying IN-PLAN (a 1-row TakeOrdered
+  * relation, never a driver collect); the truss peel re-runs
+  * [[Kernels.triangles]] on a geometrically-shrinking edge set with
+  * eager-pinned rounds and the [[graft.Fixpoint]] fixpoint-or-throw
+  * contract.
   */
 object CommunityQueries extends QueryPack {
 
@@ -50,58 +50,6 @@ object CommunityQueries extends QueryPack {
     * fixpoint are no-ops, so the two sides agree whenever Spark converges.
     */
   val TrussMaxRounds = 8
-
-  /** Per-edge triangle support of a canonical (a<b) undirected edge
-    * relation: the [[GraphQueries.embeddednessOf]] construction — orient
-    * by degree so hub wedges never blow up, intersect sorted adjacency
-    * arrays, explode each triangle into its three canonical edges, count.
-    */
-  private def edgeSupport(und: DataFrame): DataFrame = {
-    val sym = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("dg"))
-    val o = sym
-      .join(deg.select(col("src").as("s1"), col("dg").as("da")),
-        col("src") === col("s1"))
-      .join(deg.select(col("src").as("s2"), col("dg").as("db")),
-        col("dst") === col("s2"))
-      .filter(col("da") < col("db") ||
-        (col("da") === col("db") && col("src") < col("dst")))
-      .select(col("src"), col("dst"))
-      .transform(graft.CacheScope.persisted(_))
-    val adj = o.groupBy("src").agg(array_sort(collect_list(col("dst"))).as("nbr"))
-    val tri = o
-      .join(adj.select(col("src").as("u"), col("nbr").as("nu")),
-        col("src") === col("u"))
-      .join(adj.select(col("src").as("v"), col("nbr").as("nv")),
-        col("dst") === col("v"))
-      .select(col("src"), col("dst"),
-        explode(array_intersect(col("nu"), col("nv"))).as("w"))
-    tri.select(explode(array(
-        struct(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b")),
-        struct(least(col("src"), col("w")).as("a"),
-          greatest(col("src"), col("w")).as("b")),
-        struct(least(col("dst"), col("w")).as("a"),
-          greatest(col("dst"), col("w")).as("b")))).as("t"))
-      .groupBy(col("t.a").as("a"), col("t.b").as("b"))
-      .agg(count(lit(1)).as("support"))
-  }
-
-  /** Bounded-hop BFS distances from an arbitrary 1-row seed relation —
-    * [[GraphPathQueries.bfsOf]] generalized so the double sweep can hand
-    * the peripheral node to the second sweep without leaving the plan.
-    */
-  private def sweep(ew: DataFrame, seed: DataFrame): DataFrame = {
-    var d = seed.select(col("node"), lit(0L).as("hops"))
-    for (_ <- 1 to GraphPathQueries.BfsRounds) {
-      d = ew.join(d, col("src") === col("node"))
-        .groupBy(col("dst"))
-        .agg(min(col("hops") + col("w")).as("hops"))
-        .select(col("dst").as("node"), col("hops"))
-    }
-    d
-  }
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -137,15 +85,12 @@ object CommunityQueries extends QueryPack {
     // contract, so the bound is over the ≤R-hop reachable ball — the
     // honest semantics every fixpoint operator here ships with.
     "q_graph_diameter_est" -> ((s, d) => {
-      val e = windowedEdges(s, d).transform(graft.CacheScope.persisted(_))
-      val ew = e.select(col("src"), col("dst"), lit(1L).as("w"))
-        .unionByName(e.select(col("src")).distinct()
-          .select(col("src"), col("src").as("dst"), lit(0L).as("w")))
+      val e = windowedEdges(s, d)
+      val far = GraphPathQueries.bfsOf(e)
+        .orderBy(col("hops").desc, col("node").asc).limit(1)
         .transform(graft.CacheScope.persisted(_))
-      val d1 = sweep(ew, e.agg(min(col("src")).as("node")))
-      val far = d1.orderBy(col("hops").desc, col("node").asc).limit(1)
-        .transform(graft.CacheScope.persisted(_))
-      val d2 = sweep(ew, far.select(col("node")))
+      val d2 = Kernels.minPlus(Kernels.unitWeights(e), GraphPathQueries.BfsRounds,
+        "hops")(_ => far.select(col("node"), lit(0L).as("hops")))
       val d2agg = d2.agg(max(col("hops")).as("diameter_lb"),
         count(lit(1)).as("n_reached"))
       far.select(col("node").as("far_node"), col("hops").as("ecc_first"))
@@ -270,10 +215,14 @@ object CommunityQueries extends QueryPack {
     // that round IS the final edge set's support — the output reads the
     // pinned (a, b, support) relation directly instead of re-running the
     // whole triangle enumeration one more time (the old final
-    // edgeSupport(und) pass, the single costliest job of the query).
+    // support pass, the single costliest job of the query).
     var cur = und.select(col("a"), col("b"), lit(0L).as("support"))
     graft.Fixpoint.until("trussOf", TrussMaxRounds) { _ =>
-      val sup = edgeSupport(und)
+      // Per-edge triangle support over the symmetric closure.
+      val sup = Kernels.edgeTriangles(Kernels.triangles(
+        und.select(col("a").as("src"), col("b").as("dst"))
+          .unionByName(und.select(col("b").as("src"), col("a").as("dst")))),
+        "support")
       cur = pin(und.join(sup, Seq("a", "b"), "left")
         .filter(coalesce(col("support"), lit(0L)) >= TrussK - 2)
         .select(col("a"), col("b"),

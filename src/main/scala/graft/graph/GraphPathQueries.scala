@@ -52,10 +52,8 @@ object GraphPathQueries extends QueryPack {
     // within [[ClosenessRounds]] hops — the "which nodes sit central"
     // readout, harmonic rather than classic closeness so disconnected
     // remainders contribute 0 instead of poisoning the mean. This is
-    // multi-source BFS: the state relation is (seed, node, hops) and each
-    // round is STILL one equi-join + min-agg via the zero-weight
-    // self-loop fold (bfsOf's linear-plan contract); state is bounded by
-    // |seeds| × reach, and the seed modulus is the batch dial at 100 TB
+    // multi-source BFS: [[Kernels.minPlus]] keyed by seed; state is bounded
+    // by |seeds| × reach, and the seed modulus is the batch dial at 100 TB
     // (run seed cohorts back to back, union the outputs). Per-node
     // contributions 1/d are round(,9)-pinned and folded in exact DECIMAL.
     "q_graph_closeness" -> ((s, d) => harmonicOf(windowedEdges(s, d))),
@@ -114,7 +112,7 @@ object GraphPathQueries extends QueryPack {
     // contribution each round and the old per-round "left join nodes +
     // coalesce(contrib, 0)" re-attach was the identity — one equi-join +
     // one aggregation per round, no nodes pin, bit-identical output.
-    val e = graft.CacheScope.persistedOnce(edgesDf)
+    val e = graft.CacheScope.persisted(edgesDf)
     var x = e.select(col("src").as("node")).distinct()
       .select(col("node"), lit(KatzScale).as("x"))
     for (_ <- 1 to KatzIters) {
@@ -134,34 +132,18 @@ object GraphPathQueries extends QueryPack {
   val BfsRounds = 6
 
   /** Bounded-hop BFS over any symmetric (src, dst) edge relation, from
-    * the minimum node id. Each round is ONE equi-join + min-aggregation
-    * — the PageRank shuffle shape — because the edge relation carries
-    * ZERO-WEIGHT SELF-LOOPS: d'(v) = min over (u,v,w) of d(u) + w folds
-    * "keep my own distance" (self-loop, w=0) and "relax via a neighbor"
-    * (real edge, w=1) into a single consumption of the previous round's
-    * relation. The naive min(d(v), relax) form reads d TWICE per round —
-    * the 2^rounds analysis blowup the HITS rewrite measured (PLANS.md);
-    * the self-loop fold keeps the plan linear with no mid-query action.
-    * The frontier relation starts at 1 row and only ever holds REACHED
-    * nodes, so early rounds shuffle next to nothing. Public for
-    * planted-graph specs.
+    * the minimum node id: unit-weight [[Kernels.minPlus]] relaxations.
+    * Public for planted-graph specs.
     */
-  def bfsOf(edgesDf: DataFrame): DataFrame = {
-    val e = edgesDf.transform(graft.CacheScope.persisted(_))
-    val ew = e.select(col("src"), col("dst"), lit(1L).as("w"))
-      .unionByName(e.select(col("src")).distinct()
-        .select(col("src"), col("src").as("dst"), lit(0L).as("w")))
-      .transform(graft.CacheScope.persisted(_))
-    var d = e.select(col("src").as("node")).orderBy(col("node").asc).limit(1)
-      .select(col("node"), lit(0L).as("hops"))
-    for (_ <- 1 to BfsRounds) {
-      d = ew.join(d, col("src") === col("node"))
-        .groupBy(col("dst"))
-        .agg(min(col("hops") + col("w")).as("hops"))
-        .select(col("dst").as("node"), col("hops"))
-    }
-    d
-  }
+  def bfsOf(edgesDf: DataFrame): DataFrame =
+    Kernels.minPlus(Kernels.unitWeights(edgesDf), BfsRounds, "hops")(fromMinNode("hops"))
+
+  /** Single-source [[Kernels.minPlus]] start: the minimum node id at
+    * distance 0 (TakeOrdered; an aggregate here costs one more job).
+    */
+  private def fromMinNode(dist: String)(ew: DataFrame): DataFrame =
+    ew.select(col("src").as("node")).orderBy(col("node").asc).limit(1)
+      .select(col("node"), lit(0L).as(dist))
 
   /** Bellman–Ford relaxation rounds for [[ssspOf]] — same dial contract
     * as [[BfsRounds]].
@@ -183,19 +165,11 @@ object GraphPathQueries extends QueryPack {
     */
   def harmonicOf(edgesDf: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val e = edgesDf.transform(graft.CacheScope.persisted(_))
-    val ew = e.select(col("src"), col("dst"), lit(1L).as("w"))
-      .unionByName(e.select(col("src")).distinct()
-        .select(col("src"), col("src").as("dst"), lit(0L).as("w")))
-      .transform(graft.CacheScope.persisted(_))
-    var d = e.select(col("src").as("node")).distinct()
-      .filter(col("node") % ClosenessSeedMod === 0)
-      .select(col("node").as("seed"), col("node"), lit(0L).as("hops"))
-    for (_ <- 1 to ClosenessRounds) {
-      d = ew.join(d, col("src") === col("node"))
-        .groupBy(col("seed"), col("dst"))
-        .agg(min(col("hops") + col("w")).as("hops"))
-        .select(col("seed"), col("dst").as("node"), col("hops"))
+    val d = Kernels.minPlus(Kernels.unitWeights(edgesDf), ClosenessRounds,
+        "hops", Seq("seed")) { ew =>
+      ew.select(col("src").as("node")).distinct()
+        .filter(col("node") % ClosenessSeedMod === 0)
+        .select(col("node").as("seed"), col("node"), lit(0L).as("hops"))
     }
     d.filter(col("hops") > 0)
       .groupBy(col("seed"))
@@ -408,27 +382,12 @@ object GraphPathQueries extends QueryPack {
 
   /** Bounded-round Bellman–Ford over a weighted (src, dst, w) edge
     * relation, from the minimum node id — [[bfsOf]] generalized to real
-    * weights. The zero-weight self-loop fold keeps each round ONE
-    * equi-join + min-aggregation consuming the previous distance relation
-    * exactly once (linear plan; see bfsOf's design note). Distances are
+    * weights, the same [[Kernels.minPlus]] relaxation. Distances are
     * exact int64 sums — bounded by rounds × max weight, overflow-loud
     * under ANSI. Public for planted-graph specs.
     */
-  def ssspOf(edgesW: DataFrame): DataFrame = {
-    val ew = edgesW
-      .unionByName(edgesW.select(col("src")).distinct()
-        .select(col("src"), col("src").as("dst"), lit(0L).as("w")))
-      .transform(graft.CacheScope.persisted(_))
-    var dist = ew.select(col("src").as("node")).orderBy(col("node").asc).limit(1)
-      .select(col("node"), lit(0L).as("dist"))
-    for (_ <- 1 to SsspRounds) {
-      dist = ew.join(dist, col("src") === col("node"))
-        .groupBy(col("dst"))
-        .agg(min(col("dist") + col("w")).as("dist"))
-        .select(col("dst").as("node"), col("dist"))
-    }
-    dist
-  }
+  def ssspOf(edgesW: DataFrame): DataFrame =
+    Kernels.minPlus(edgesW, SsspRounds, "dist")(fromMinNode("dist"))
 
   /** Hop bound for [[betweennessOf]]'s forward/backward passes. */
   val BetweennessRounds = 4
@@ -501,6 +460,14 @@ object GraphPathQueries extends QueryPack {
       .select(col("node"), round(col("bsum").cast("double"), 6).as("dependency"))
   }
 
+  /** One unrolled Borůvka round i for the MST oracle: label endpoints
+    * with l{i-1}, pick each component's (w, src, dst)-minimum cross
+    * edge, accumulate the forest (c$i), and relabel via a recursive
+    * reachability CTE over the CUMULATIVE forest — the window rn=1 form
+    * of Spark's min(struct). Rounds past completion pick nothing and
+    * relabel identically, so the fixed unroll equals the early-exit
+    * loop.
+    */
   private def mstRoundCte(i: Int): String =
     s"""x$i AS MATERIALIZED (
        |  SELECT u.src, u.dst, u.w, a.comp AS ca, b.comp AS cb
@@ -562,10 +529,7 @@ object GraphPathQueries extends QueryPack {
        |SELECT src, dst, CAST(w AS BIGINT) AS w FROM c$MstRounds""".stripMargin
   }
 
-  /** One unrolled personalized-PageRank iteration i: the restart term
-    * lands only on seed nodes (src % PprSeedMod == 0).
-    */
-
+  /** One unrolled BFS relaxation round (reads d{i-1}, defines d{i}). */
   private def bfsCte(i: Int): String =
     s"""d$i AS (
        |  SELECT ew.dst AS node, min(d.hops + ew.w) AS hops

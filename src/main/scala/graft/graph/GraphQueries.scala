@@ -19,30 +19,8 @@ import graft.{QueryPack, Tables}
   * symmetric by construction, so every node has outdegree >= 1 and the
   * classic dangling-mass correction drops out.
   *
-  * Determinism (the whole point of the formulation): ranks are FIXED-POINT
-  * int64 micro-units (Scale = 10^12 per node of initial mass), every step
-  * is integer arithmetic — `r div outdeg` flooring, damping as
-  * `(85*x) div 100` — and integer sums are order-independent, so the
-  * result is bit-identical in any engine, any partitioning, any merge
-  * order. A float formulation could NEVER hash-match across engines
-  * (summation order changes the last bits). Overflow headroom: total mass
-  * is N*Scale and a single node's contribution sum is bounded by it, so
-  * `85 * contrib` needs N*Scale*85 < 2^63 — N up to ~1.1e5 at this Scale
-  * (2^63 / (85*10^12)); at larger N, Scale is the dial (the
-  * precision/width trade is explicit, not silent). The worst case needs a
-  * near-total-mass hub, so typical graphs go far beyond N=1.1e5, and the
-  * failure mode is loud either way: Spark 4 runs ANSI mode by default, so
-  * int64 overflow THROWS instead of wrapping — the engines cannot
-  * silently diverge, the job fails asking for a smaller Scale.
-  *
-  * Scale design: each iteration is one join edges->ranks (equi on src,
-  * both sides partitioned by the join key) + one dst aggregation — the
-  * same shuffle shape GraphX/Pregel lowers to. Five iterations build one
-  * linear lineage (each intermediate rank relation feeds exactly the next
-  * iteration, so nothing recomputes); the edge+degree relation feeds all
-  * five and is pinned once. At a 100 TB edge relation you would
-  * checkpoint ranks every few iterations exactly as DedupClusters does —
-  * same fixpoint skeleton, different semiring.
+  * The rank iteration itself — integer fixed-point determinism, overflow
+  * headroom and round shape — is [[Kernels.rank]].
   */
 object GraphQueries extends QueryPack {
 
@@ -77,18 +55,12 @@ object GraphQueries extends QueryPack {
     * (LabelsMemo temp-parquet): six registered queries consume it, and at
     * 100 TB it is a managed table the graph jobs read, not a lineage each
     * of them replays from lineitem. The honest-producer discipline from
-    * the dedup labels memo applies — [[pagerank]] (the flagship consumer)
+    * the dedup labels memo applies — q_graph_pagerank (the flagship consumer)
     * builds from [[edgesRaw]] directly, so its benched number keeps the
     * full build cost; the others read the materialized copy.
     */
   private[graph] def edges(s: SparkSession, d: String): DataFrame =
     graft.LabelsMemo.getOrCompute(s"copurchase-edges:$d", s)(edgesRaw(s, d))
-
-  /** 5-iteration fixed-point PageRank over the co-purchase graph (the
-    * edges PRODUCER — reads the raw lineage, never the memo).
-    */
-  def pagerank(s: SparkSession, d: String): DataFrame =
-    pagerankOf(edgesRaw(s, d))
 
   /** The fixpoint itself, over any (src, dst) edge relation in which every
     * node appears as a src (symmetric graphs satisfy this for free).
@@ -96,39 +68,9 @@ object GraphQueries extends QueryPack {
     * integer-truncation loss, structural symmetry, and bit-identical
     * results under repartitioning.
     */
-  def pagerankOf(edgesDf: DataFrame): DataFrame = {
-    // The edge relation runs ONCE: it feeds the degree count and (with
-    // outdeg attached) every iteration's rank join — both pinned; these
-    // are the relations a cluster run would checkpoint. The per-round
-    // "left join nodes + coalesce" re-attach is deliberate plan shaping,
-    // not redundancy: `nodes` projects the PINNED, size-known deg
-    // relation, so every round's rank side carries a node-count estimate
-    // and Catalyst broadcasts it under the edge join while it fits (an
-    // r13 A/B probe of the fold-into-one-agg variant measured 5.5 s vs
-    // 2.0 s steady-state — the agg-chained rank side loses the size
-    // estimate and every round degrades to a 1.2M-row shuffle join; at
-    // cluster scale both shapes degrade gracefully to the same
-    // node-keyed shuffle join once ranks outgrow the threshold).
-    val e = graft.CacheScope.persistedOnce(edgesDf)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .transform(graft.CacheScope.persisted(_))
-    val ed = e.join(deg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .transform(graft.CacheScope.persisted(_))
-    val nodes = deg.select(col("src").as("node"))
-    var r = nodes.select(col("node"), lit(Scale).as("r"))
-    for (_ <- 1 to Iters) {
-      val contrib = ed.join(r, col("src") === col("node"))
-        .select(col("dst"), expr("r div outdeg").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      r = nodes
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit((100L - DampPct) * Scale / 100L) +
-            expr(s"($DampPct * coalesce(contrib, 0L)) div 100")).as("r"))
-    }
-    r.select(col("node"), col("r").as("pr_fixed"))
-  }
+  def pagerankOf(edgesDf: DataFrame): DataFrame =
+    Kernels.rank(Kernels.unitWeights(edgesDf), lit(true))
+      .select(col("node"), col("r").as("pr_fixed"))
 
   /** Personalized PageRank: the random walk restarts at the SEED SET
     * (parts with pk % [[PprSeedMod]] == 0 — a dial) instead of uniformly,
@@ -138,67 +80,25 @@ object GraphQueries extends QueryPack {
     * change is the restart term: (1-d)·Scale lands on seeds only, and the
     * init places all mass on seeds. Nodes unreachable from any seed
     * finish at exactly 0 and are filtered — at 100 TB the output is the
-    * seeds' basin, not the whole graph.
+    * seeds' basin, not the whole graph (see [[Kernels.rank]] for the
+    * rejected per-round frontier prune).
     */
-  def pprOf(edgesDf: DataFrame): DataFrame = {
-    // Same plan-shaping rationale as [[pagerankOf]]: the per-round rank
-    // side projects the pinned deg relation so it keeps a broadcastable
-    // size estimate under the edge join.
-    val e = graft.CacheScope.persistedOnce(edgesDf)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .transform(graft.CacheScope.persisted(_))
-    val ed = e.join(deg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .transform(graft.CacheScope.persisted(_))
-    val nodes = deg.select(col("src").as("node"),
-      (col("src") % PprSeedMod === 0).as("seed"))
-    val base = (100L - DampPct) * Scale / 100L
-    // FRONTIER PRUNE — tried and REJECTED (VERDICT r13 #2, r14 A/B
-    // probe): filtering r > 0 per round so early rounds join only the
-    // seeds' expanding basin is bit-identical (zero-rank sources
-    // contribute exactly 0, absent contributions coalesce to 0, the
-    // final filter dropped r = 0 rows anyway) but measured 3x SLOWER
-    // (sf0.1, n=2 each, interleaved: pruned 8.02/7.62 s vs
-    // unpruned 2.60/2.95 s) — the per-round Filter above the left join
-    // degrades the rank side's join planning without buying coverage,
-    // because the basin SATURATES after one round at this degree:
-    // 400 seeds (2%) reach 18,197 of 20,000 nodes in round 1 and all
-    // 20,000 by round 2 (avg degree ~45). A frontier prune only pays on
-    // graphs whose basin stays small for several rounds — long-diameter
-    // or low-degree relations — and should gate on a measured expansion
-    // rate, not be unconditional. Probe committed: bench/r14-ppr-probe.txt.
-    var r = nodes.select(col("node"),
-      when(col("seed"), lit(Scale)).otherwise(lit(0L)).as("r"))
-    for (_ <- 1 to Iters) {
-      val contrib = ed.join(r, col("src") === col("node"))
-        .select(col("dst"), expr("r div outdeg").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      r = nodes
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (when(col("seed"), lit(base)).otherwise(lit(0L)) +
-            expr(s"($DampPct * coalesce(contrib, 0L)) div 100")).as("r"))
-    }
-    r.filter(col("r") > 0).select(col("node"), col("r").as("ppr_fixed"))
-  }
+  def pprOf(edgesDf: DataFrame): DataFrame =
+    Kernels.rank(Kernels.unitWeights(edgesDf), col("src") % PprSeedMod === 0)
+      .filter(col("r") > 0).select(col("node"), col("r").as("ppr_fixed"))
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_graph_pagerank" -> ((s, d) => pagerank(s, d)),
+    // 5-iteration fixed-point PageRank over the co-purchase graph — the
+    // edges PRODUCER: reads the raw lineage, never the memo.
+    "q_graph_pagerank" -> ((s, d) => pagerankOf(edgesRaw(s, d))),
 
     "q_graph_ppr" -> ((s, d) => pprOf(edges(s, d))),
 
-    // Per-node triangle counts with the DEGREE-ORDERED orientation: each
-    // undirected edge points from lower to higher (degree, id), which (a)
-    // counts every triangle exactly once at its base edge and (b) bounds
-    // every oriented out-degree by O(sqrt(2m)) — the classic result that
-    // makes triangle counting feasible on power-law graphs, where the
-    // naive hub wedge count is quadratic in the hub degree. The apexes of
-    // each base edge come from array_intersect over the two endpoints'
-    // out-neighbor arrays — the wedge relation (41M rows at sf0.1 vs
-    // 1.2M oriented edges) is never materialized or shuffled; the same
-    // pair-local-intersect discipline as dedup_prefix_jaccard's verify.
-    // The oracle counts through the INDEPENDENT wedge-join formulation,
-    // so a bug in either shape breaks the match.
+    // Per-node triangle counts over the degree-ordered orientation
+    // ([[Kernels.triangles]]: hub-bounded out-degrees, apexes by
+    // adjacency intersect, no wedge relation). The oracle counts through
+    // the INDEPENDENT wedge-join formulation, so a bug in either shape
+    // breaks the match.
     "q_graph_triangles" -> ((s, d) => trianglesOf(edges(s, d))),
 
     // Per-edge link strength (edge embeddedness): common-neighbor count
@@ -451,74 +351,27 @@ object GraphQueries extends QueryPack {
     * — shared by the registered query and GraphSpec's planted graphs, so
     * the spec exercises the exact production formulation.
     */
-  def trianglesOf(edgesDf: DataFrame): DataFrame = {
-    val e = edgesDf
-      .transform(graft.CacheScope.persisted(_))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
-    val o = e
-      .join(deg.select(col("src").as("s1"), col("dg").as("da")),
-        col("src") === col("s1"))
-      .join(deg.select(col("src").as("s2"), col("dg").as("db")),
-        col("dst") === col("s2"))
-      .filter(col("da") < col("db") ||
-        (col("da") === col("db") && col("src") < col("dst")))
-      .select(col("src"), col("dst"))
-      .transform(graft.CacheScope.persisted(_))
-    val adj = o.groupBy("src").agg(array_sort(collect_list(col("dst"))).as("nbr"))
-      .transform(graft.CacheScope.persisted(_))
-    val tri = o
-      .join(adj.select(col("src").as("u"), col("nbr").as("nu")),
-        col("src") === col("u"))
-      .join(adj.select(col("src").as("v"), col("nbr").as("nv")),
-        col("dst") === col("v"))
-      .select(col("src"), col("dst"),
-        explode(array_intersect(col("nu"), col("nv"))).as("w"))
-    tri.select(explode(array(col("src"), col("dst"), col("w"))).as("node"))
+  def trianglesOf(edgesDf: DataFrame): DataFrame =
+    Kernels.triangles(edgesDf)
+      .select(explode(array(col("src"), col("dst"), col("w"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
-  }
 
   /** Per-edge common neighbors + neighbor-set Jaccard over any symmetric
-    * (src, dst) edge relation. Triangles ARE the common neighbors: the
-    * degree-ordered oriented triangle relation (same construction as
-    * [[trianglesOf]], so the hub wedge blow-up cannot happen) is exploded
-    * into its three canonical (min,max) edges and counted per edge — the
-    * wedge relation is never materialized. Jaccard denominator from the
-    * two endpoint degrees: |N(u) ∪ N(v)| = d(u) + d(v) - common (u, v
-    * are in each other's neighbor sets but never in the intersection —
-    * no self-loops). The oracle deliberately counts through the
-    * independent all-pairs wedge join.
+    * (src, dst) edge relation. Triangles ARE the common neighbors: each
+    * degree-oriented triangle ([[Kernels.triangles]], so the hub wedge
+    * blow-up cannot happen) counts once for each of its three canonical
+    * edges — the wedge relation is never materialized. Jaccard
+    * denominator from the two endpoint degrees: |N(u) ∪ N(v)| = d(u) +
+    * d(v) - common (u, v are in each other's neighbor sets but never in
+    * the intersection — no self-loops). The oracle deliberately counts
+    * through the independent all-pairs wedge join.
     */
   def embeddednessOf(edgesDf: DataFrame): DataFrame = {
+    // e and deg feed both the triangle kernel (whose orientation reads this
+    // same deg plan) and the Jaccard joins: pinned (measured 5.8 vs 6.1-9.4 s).
     val e = edgesDf.transform(graft.CacheScope.persisted(_))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
-      .transform(graft.CacheScope.persisted(_))
-    val o = e
-      .join(deg.select(col("src").as("s1"), col("dg").as("da")),
-        col("src") === col("s1"))
-      .join(deg.select(col("src").as("s2"), col("dg").as("db")),
-        col("dst") === col("s2"))
-      .filter(col("da") < col("db") ||
-        (col("da") === col("db") && col("src") < col("dst")))
-      .select(col("src"), col("dst"))
-      .transform(graft.CacheScope.persisted(_))
-    val adj = o.groupBy("src").agg(array_sort(collect_list(col("dst"))).as("nbr"))
-      .transform(graft.CacheScope.persisted(_))
-    val tri = o
-      .join(adj.select(col("src").as("u"), col("nbr").as("nu")),
-        col("src") === col("u"))
-      .join(adj.select(col("src").as("v"), col("nbr").as("nv")),
-        col("dst") === col("v"))
-      .select(col("src"), col("dst"),
-        explode(array_intersect(col("nu"), col("nv"))).as("w"))
-    val common = tri.select(explode(array(
-        struct(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b")),
-        struct(least(col("src"), col("w")).as("a"),
-          greatest(col("src"), col("w")).as("b")),
-        struct(least(col("dst"), col("w")).as("a"),
-          greatest(col("dst"), col("w")).as("b")))).as("t"))
-      .groupBy(col("t.a").as("a"), col("t.b").as("b"))
-      .agg(count(lit(1)).as("common"))
+    val deg = graft.CacheScope.persisted(Kernels.degrees(e))
+    val common = Kernels.edgeTriangles(Kernels.triangles(e), "common")
     e.filter(col("src") < col("dst"))
       .join(common, col("src") === col("a") && col("dst") === col("b"), "left")
       .join(deg.select(col("src").as("d1"), col("dg").as("deg_a")),
@@ -615,7 +468,7 @@ object GraphQueries extends QueryPack {
     // "left join nodes + coalesce(lbl, node)" re-attach was the identity
     // — each round is now one equi-join + two aggregations, one join and
     // one pinned relation fewer (bit-identical output, same hash).
-    val e = graft.CacheScope.persistedOnce(edgesDf)
+    val e = graft.CacheScope.persisted(edgesDf)
     var lab = e.select(col("src").as("node"), col("src").as("lbl")).distinct()
     for (_ <- 1 to rounds) {
       val cnt = e.join(lab, col("dst") === col("node"))
@@ -705,13 +558,8 @@ object GraphQueries extends QueryPack {
        |  FROM be JOIN a$i a ON a.p = be.p GROUP BY be.c
        |)""".stripMargin
 
-  /** One unrolled Borůvka round i for the MST oracle: label endpoints
-    * with l{i-1}, pick each component's (w, src, dst)-minimum cross
-    * edge, accumulate the forest (c$i), and relabel via a recursive
-    * reachability CTE over the CUMULATIVE forest — the window rn=1 form
-    * of Spark's min(struct). Rounds past completion pick nothing and
-    * relabel identically, so the fixed unroll equals the early-exit
-    * loop.
+  /** One unrolled personalized-PageRank iteration i: the restart term
+    * lands only on seed nodes (src % PprSeedMod == 0).
     */
   private def pprIterCte(i: Int): String = {
     val base = (100L - DampPct) * Scale / 100L
@@ -727,7 +575,6 @@ object GraphQueries extends QueryPack {
        |)""".stripMargin
   }
 
-  /** One unrolled BFS relaxation round (reads d{i-1}, defines d{i}). */
   override val oracles: Map[String, String] = Map(
     "q_graph_ppr" ->
       s"""$edgesCte,

@@ -28,23 +28,24 @@ import graft.relational.Det.{dsum, dsumSql}
   *
   * Scratch storage: like [[graft.dedup.DedupClusters]], the demo tables
   * are written to a driver-local temp dir, which is only correct with a
-  * local master — guarded here; a cluster deployment passes a shared-FS
-  * `base`. Cleanup (drop table + delete files) is registered with
-  * [[CacheScope]] so the harness's releaseAll tears the layout down after
-  * the result is consumed.
+  * single-JVM local master — guarded here; a cluster (or local-cluster)
+  * deployment passes a shared-FS `base`. Cleanup (drop table + delete
+  * files) is registered with [[CacheScope]] so the harness's releaseAll
+  * tears the layout down after the result is consumed.
   */
 object LayoutQueries extends QueryPack {
 
   private val seq = new AtomicLong()
 
-  private def requireLocalOrBase(s: SparkSession, base: Option[String]): Unit =
-    require(base.isDefined || s.sparkContext.master.startsWith("local"),
-      s"LayoutQueries: master '${s.sparkContext.master}' is not local — " +
+  /** Off a single JVM ([[graft.Fixpoint.singleJvm]]) scratch needs `base`. */
+  private[graft] def requireLocalOrBase(master: String, base: Option[String]): Unit =
+    require(base.isDefined || graft.Fixpoint.singleJvm(master),
+      s"LayoutQueries: master '$master' is not a single local JVM — " +
         "pass base= a shared-filesystem path (driver-local scratch dirs " +
         "are not visible to cluster executors)")
 
   private def scratch(s: SparkSession, base: Option[String]): String = {
-    requireLocalOrBase(s, base)
+    requireLocalOrBase(s.sparkContext.master, base)
     base.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-layout-").toString)
   }

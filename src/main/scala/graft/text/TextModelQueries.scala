@@ -197,15 +197,11 @@ object TextModelQueries extends QueryPack {
     // TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank over
     // the word co-occurrence graph (adjacent clean tokens, undirected,
     // weighted by co-occurrence count, hapax edges pruned), emitting the
-    // corpus top-30 keywords. Reuses the graph pack's integer fixed-point
-    // discipline verbatim — rank in units of 1e-12 on int64, r div wdeg
-    // truncation, both engines bit-identical, zero float drift — with
-    // the weighted twist: each neighbor's pull is w(u,v)·(r(u) div W(u)),
-    // W(u) the node's total edge weight. Per-term contribution <= r(u)
-    // (w <= W), so a node's inbound sum is bounded by vocab·Scale —
-    // inside int64 up to ~1e6 distinct words; past that, drop Scale one
-    // decade. The final top-30 is TakeOrderedAndProject (global top-k,
-    // no window); 5 iterations, unrolled as CTEs in the oracle.
+    // corpus top-30 keywords. The rank is the graph pack's weighted integer
+    // fixed-point iteration ([[graft.graph.Kernels.rank]]: each neighbor
+    // pulls w(u,v)·(r(u) div W(u)), both engines bit-identical). The final
+    // top-30 is TakeOrderedAndProject (global top-k, no window); 5
+    // iterations, unrolled as CTEs in the oracle.
     "text_textrank" -> ((s, d) => textrankOf(docs(s, d))),
 
     // Winnowing-based near-dup CANDIDATE PAIRS: documents sharing >= 2
@@ -316,10 +312,12 @@ object TextModelQueries extends QueryPack {
       .distinct()
   }
 
-  /** TextRank dials (see the registration comment). */
-  val TrIters = 5
-  val TrScale = 1000000000000L
-  val TrDampPct = 85L
+  /** TextRank dials (see the registration comment); rounds, scale and
+    * damping are the PageRank dials of [[graft.graph.Kernels.rank]].
+    */
+  val TrIters: Int = graft.graph.GraphQueries.Iters
+  val TrScale: Long = graft.graph.GraphQueries.Scale
+  val TrDampPct: Long = graft.graph.GraphQueries.DampPct
   val TrMinCooc = 2
   val TrTopK = 30
 
@@ -340,24 +338,8 @@ object TextModelQueries extends QueryPack {
       .union(bg.select(col("w2").as("src"), col("w1").as("dst")))
       .groupBy("src", "dst").agg(count(lit(1)).as("w"))
       .filter(col("w") >= TrMinCooc)
-      .transform(CacheScope.persisted(_))
-    val deg = und.groupBy("src").agg(sum(col("w")).as("wdeg"))
-      .transform(CacheScope.persisted(_))
-    val ed = und.join(deg, "src")
-      .select(col("src"), col("dst"), col("w"), col("wdeg"))
-      .transform(CacheScope.persisted(_))
-    val nodes = deg.select(col("src").as("node"))
-    var r = nodes.select(col("node"), lit(TrScale).as("r"))
-    for (_ <- 1 to TrIters) {
-      val contrib = ed.join(r, col("src") === col("node"))
-        .select(col("dst"), (col("w") * expr("r div wdeg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      r = nodes.join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit((100L - TrDampPct) * TrScale / 100L) +
-            expr(s"($TrDampPct * coalesce(contrib, 0L)) div 100")).as("r"))
-    }
-    r.select(col("node").as("word"), col("r").as("tr_fixed"))
+    graft.graph.Kernels.rank(und, lit(true))
+      .select(col("node").as("word"), col("r").as("tr_fixed"))
       .orderBy(col("tr_fixed").desc, col("word").asc)
       .limit(TrTopK)
   }

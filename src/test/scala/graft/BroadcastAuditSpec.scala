@@ -22,6 +22,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   */
 class BroadcastAuditSpec extends SparkSpec {
 
+  test("no explicit broadcast hint covers an unguarded big-table scan") {
+    val offenders = SurfacePlans.audit(spark, sfDir).broadcast
+    assert(offenders.isEmpty,
+      s"explicit broadcast over an unguarded big scan:\n${offenders.mkString("\n")}")
+  }
+}
+
+object BroadcastAuditSpec {
+
   /** The unbounded tables: anything whose row count scales with the
     * corpus. region/nation and the fixture side tables are genuinely
     * constant-size and broadcasting them raw is the intended plan.
@@ -55,19 +64,11 @@ class BroadcastAuditSpec extends SparkSpec {
     */
   private val allowed = Set("dedup_semdedup_eval")
 
-  test("no explicit broadcast hint covers an unguarded big-table scan") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => allowed(name) }
-      .flatMap { case (name, fn) =>
-        val plan =
-          try fn(spark, sfDir).queryExecution.analyzed
-          finally CacheScope.releaseAll() // same discipline as PlanAuditSpec
-        plan.collect {
-          case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) &&
-              unguarded(h.child) => name
-        }.distinct
-      }
-    assert(offenders.isEmpty,
-      s"explicit broadcast over an unguarded big scan:\n${offenders.mkString("\n")}")
-  }
+  /** This audit's findings for one key's analyzed plan. */
+  def offenders(name: String, analyzed: LogicalPlan): Seq[String] =
+    if (allowed(name)) Nil
+    else analyzed.collect {
+      case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) &&
+          unguarded(h.child) => name
+    }.distinct
 }

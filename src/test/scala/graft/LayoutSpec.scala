@@ -40,6 +40,21 @@ class LayoutSpec extends SparkSpec {
     } finally CacheScope.releaseAll()
   }
 
+  test("scratch guard: a master outside the driver JVM needs base=") {
+    // A pure function of (master, base) — testable without a cluster.
+    // local-cluster runs executors in separate JVMs, which cannot see a
+    // driver-local temp dir.
+    for (master <- Seq("spark://host:7077", "local-cluster[2,2,1024]")) {
+      val e = intercept[IllegalArgumentException] {
+        layout.LayoutQueries.requireLocalOrBase(master, None)
+      }
+      assert(e.getMessage.contains("base="), e.getMessage)
+    }
+    layout.LayoutQueries.requireLocalOrBase("local-cluster[2,2,1024]",
+      Some("/shared/layout"))
+    layout.LayoutQueries.requireLocalOrBase("local[4]", None)
+  }
+
   test("z-order bounds BOTH dimensions' spans; linear leaves one unpruned") {
     try {
       val rows = SparkEntry.queries("q_layout_zorder")(spark, sfDir)

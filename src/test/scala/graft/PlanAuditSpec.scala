@@ -15,6 +15,14 @@ import org.apache.spark.sql.execution.window.WindowExec
   */
 class PlanAuditSpec extends SparkSpec {
 
+  test("no query plans a Cartesian product or an unpartitioned window") {
+    val offenders = SurfacePlans.audit(spark, sfDir).executed
+    assert(offenders.isEmpty, s"scale-killers found:\n${offenders.mkString("\n")}")
+  }
+}
+
+object PlanAuditSpec {
+
   private def flatten(p: SparkPlan): Seq[SparkPlan] = {
     val kids = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -24,19 +32,14 @@ class PlanAuditSpec extends SparkSpec {
     p +: kids.flatMap(flatten)
   }
 
-  test("no query plans a Cartesian product or an unpartitioned window") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val nodes =
-          try flatten(fn(spark, sfDir).queryExecution.executedPlan)
-          finally CacheScope.releaseAll() // same discipline as Verify/Bench
-        val cartesian = nodes.collect { case c: CartesianProductExec => c }
-        val globalWindow = nodes.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty => w
-        }
-        (if (cartesian.nonEmpty) Seq(s"$name: CartesianProduct") else Nil) ++
-          (if (globalWindow.nonEmpty) Seq(s"$name: unpartitioned Window") else Nil)
+  /** This audit's findings for one key's executed plan. */
+  def offenders(name: String, executed: SparkPlan): Seq[String] = {
+    val nodes = flatten(executed)
+    val cartesian = nodes.collect { case c: CartesianProductExec => c }
+    val globalWindow = nodes.collect {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
     }
-    assert(offenders.isEmpty, s"scale-killers found:\n${offenders.mkString("\n")}")
+    (if (cartesian.nonEmpty) Seq(s"$name: CartesianProduct") else Nil) ++
+      (if (globalWindow.nonEmpty) Seq(s"$name: unpartitioned Window") else Nil)
   }
 }
