@@ -17,7 +17,17 @@ import graft.text.{PorterStemmer, Tokenize}
   *   sbt "runMain graft.GenStemMap"
   */
 object GenStemMap {
-  val DefaultOut = "/root/repo/src/test/resources/stemmap.tsv"
+  /** Where the map lives: `-Dgraft.stemmap.path=...`, then
+    * `$GRAFT_STEMMAP_PATH`, then `src/test/resources/stemmap.tsv` under
+    * the working directory. The stemmed `tfidf_*` oracles read the same
+    * path (DuckDB `read_csv` needs a real file, so a classpath resource
+    * can't serve).
+    */
+  val DefaultOut: String =
+    sys.props.get("graft.stemmap.path")
+      .orElse(sys.env.get("GRAFT_STEMMAP_PATH"))
+      .getOrElse(new java.io.File("src/test/resources/stemmap.tsv")
+        .getAbsolutePath)
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else DefaultOut

@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Cross-query memo for expensive DERIVED relations consumed by several
   * registered queries — concretely the dedup cluster labels, which
@@ -42,13 +43,14 @@ object LabelsMemo {
     * bin shared with unrelated keys, and a compute that re-enters
     * `getOrCompute` for a different key cannot deadlock the map.
     */
-  private final class Holder(compute: () => String) {
+  private final class Holder(compute: () => (String, StructType)) {
     @volatile private var done = false
-    lazy val path: String = { val p = compute(); done = true; p }
+    /** The file and the schema it was written with. */
+    lazy val written: (String, StructType) = { val w = compute(); done = true; w }
     /** Set only once the compute finished — lets teardown skip (not force)
       * holders whose compute never ran or threw.
       */
-    def pathIfComputed: Option[String] = if (done) Some(path) else None
+    def pathIfComputed: Option[String] = if (done) Some(written._1) else None
   }
 
   private val memo = new ConcurrentHashMap[String, Holder]()
@@ -86,14 +88,18 @@ object LabelsMemo {
       compute: => DataFrame): DataFrame = {
     ensureShutdownHook()
     // computeIfAbsent inserts only the holder (cheap, non-reentrant); the
-    // Spark job runs when `.path` is forced, outside the map's bin lock.
+    // Spark job runs when `.written` is forced, outside the map's bin lock.
     val holder = memo.computeIfAbsent(key, _ => new Holder(() => {
       val dir = java.nio.file.Files.createTempDirectory("graft-memo-")
       val p = s"$dir/rel.parquet"
-      compute.write.mode("overwrite").parquet(p)
-      p
+      val df = compute
+      df.write.mode("overwrite").parquet(p)
+      p -> GraftSqlBridge.asNullable(df.schema)
     }))
-    spark.read.parquet(holder.path)
+    // Read back with the schema it was written with, so no read runs
+    // Spark's schema-inference job.
+    val (path, schema) = holder.written
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Harness teardown: drop every memoized file and forget the keys. */

@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md). */
 object Tables {
@@ -18,7 +21,7 @@ object Tables {
       // consumer sees one schema; sessions pin UTC, so the NTZ cast is
       // value-preserving and agrees with DuckDB's naive read.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = readParquet(spark, s"$dir/$name.parquet")
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       // NB: integer division — `/ 1000` would be DOUBLE division, and
@@ -30,7 +33,44 @@ object Tables {
           df.withColumn("ts", col("ts").cast(TimestampType))
         case _ => df
       }
-    } else normalizeNtz(spark.read.parquet(s"$dir/$name.parquet"))
+    } else normalizeNtz(readParquet(spark, s"$dir/$name.parquet"))
+  }
+
+  /** What a schema was inferred under: every file's (path, length,
+    * mtime) and the session's `*.parquet.*` confs (the nanos-as-long
+    * switch changes the inferred type).
+    */
+  private type Fingerprint = (Seq[(String, Long, Long)], Seq[(String, String)])
+
+  /** Inferred schemas by path, each with its fingerprint. A rewritten
+    * file or a changed conf misses and re-infers.
+    */
+  private val schemas = new ConcurrentHashMap[String, (Fingerprint, StructType)]()
+
+  /** `spark.read.parquet(path)` without the one-task schema-inference job
+    * on every read after the first: the schema is kept per path and
+    * handed to the reader. A missing path reads plainly, so it fails
+    * with Spark's own error.
+    */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path)
+    else {
+      val files = Iterator.unfold(fs.listFiles(p, true))(it =>
+          Option.when(it.hasNext)(it.next() -> it))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toSeq.sortBy(_._1)
+      val fp: Fingerprint =
+        (files, spark.conf.getAll.filter(_._1.contains(".parquet.")).toSeq.sorted)
+      val schema = Option(schemas.get(path)).filter(_._1 == fp).map(_._2)
+        .getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(path, fp -> inferred)
+          inferred
+        }
+      spark.read.schema(schema).parquet(path)
+    }
   }
 
   /** Untagged parquet timestamps (timestamp[us], no UTC flag) infer as

@@ -272,18 +272,37 @@ object GraphQueries extends QueryPack {
       .distinct()
 
   /** HITS over any bipartite (c, p) edge relation, bit-reproducible across
-    * engines: each half-step is one equi-join + aggregation (the PageRank
-    * shuffle shape) over EXACT integers — hub mass starts at 1 per node
-    * and the iteration runs RAW (no mid-round normalization), so every
+    * engines. The iteration runs RAW over EXACT integers: hub mass starts
+    * at 1 per customer, there is no mid-round normalization, and every
     * score is an exact DECIMAL(38,0) integer (order-independent sums,
-    * overflow-loud under ANSI) and the whole 2*rounds-step chain is ONE
-    * linear lazy DAG with a single action. Textbook HITS' float
-    * normalization happens ONCE at the end per side: scores scale to a
-    * total side mass of [[HitsTot]] by integral division with the side
-    * total (a broadcast 1-row aggregate against the PINNED final
-    * relation — mid-iteration the same crossJoin would embed each
-    * half-step's lineage twice, a 2^(2*rounds) plan blowup; at the end it
-    * doubles a linear plan once, measured 4.6s -> 1.9s at sf0.1).
+    * overflow-loud under ANSI). Textbook HITS' float normalization
+    * happens ONCE at the end per side: scores scale to a total side mass
+    * of [[HitsTot]] by integral division with the side total.
+    *
+    * Message round: the state carries its own adjacency, so no half-step
+    * joins the edges back in. Hub state is (c, h, ps), with ps every part
+    * c bought (one groupBy over the edges). A half-step explodes ps into
+    * messages (p, c, h) and runs ONE aggregation, grouping by p into
+    * (p, a = sum(h), cs = collect_list(c)). The senders that reach p are
+    * exactly p's neighbours, so (p, a, cs) is the authority state and
+    * the next half-step runs the same way back. collect_list keeps
+    * duplicate edges, so they count with multiplicity as in the join
+    * formulation the oracle unrolls. Each half-step is one shuffle with
+    * no join and no broadcast job.
+    *
+    * Why no pin: nothing is read twice until the end, so the whole query
+    * is one lazy plan with a single action and the builder runs no job.
+    * The final per-side `crossJoin(broadcast(total))` reads its side's
+    * lineage twice; both reads plan to the same exchanges, which Spark's
+    * exchange reuse computes once.
+    *
+    * Hub-array bound: one state row holds a node's whole neighbour list,
+    * so the largest degree must fit in one row (a task's memory, and
+    * under 2^31 - 15 elements). A month of customer-part purchases is
+    * far below that; a power-law graph at scale would need its hubs
+    * split first. Messages carry their sender id, which makes each
+    * shuffle a few bytes a message larger than the join form's.
+    *
     * Overflow headroom: raw scores are bounded by edges^(rounds) *
     * maxdeg^(rounds-1); DECIMAL(38,0) minus the 10^15 renormalization
     * factor leaves ~10^23 — beyond that ANSI throws loudly and the dial
@@ -291,22 +310,23 @@ object GraphQueries extends QueryPack {
     * (side 'hub'|'auth', node, score). Public for planted-graph specs.
     */
   def hitsOf(edgesDf: DataFrame): DataFrame = {
-    val dec = "DECIMAL(38,0)"
-    val e = edgesDf.transform(graft.CacheScope.persisted(_))
-    var h = e.select(col("c")).distinct()
-      .select(col("c"), expr(s"CAST(1 AS $dec)").as("h"))
+    // Either side's state is (n node, v score, adj neighbours).
+    def step(state: DataFrame) =
+      state.select(explode(col("adj")).as("to"), col("n").as("from"), col("v"))
+        .groupBy(col("to").as("n"))
+        .agg(sum(col("v")).as("v"), collect_list(col("from")).as("adj"))
+    var h = edgesDf.groupBy(col("c").as("n")).agg(collect_list(col("p")).as("adj"))
+      .select(col("n"), expr("CAST(1 AS DECIMAL(38,0))").as("v"), col("adj"))
     var a: DataFrame = null
     for (_ <- 1 to HitsRounds) {
-      a = e.join(h, Seq("c")).groupBy("p").agg(sum(col("h")).as("a"))
-      h = e.join(a, Seq("p")).groupBy("c").agg(sum(col("a")).as("h"))
+      a = step(h)
+      h = step(a)
     }
-    val af = graft.CacheScope.persisted(a)
-    val hf = graft.CacheScope.persisted(h)
-    def norm(df: DataFrame, side: String, node: String, v: String) =
-      df.crossJoin(broadcast(df.agg(sum(col(v)).as("tot"))))
-        .select(lit(side).as("side"), col(node).as("node"),
-          expr(s"CAST(($v * $HitsTot) div tot AS BIGINT)").as("score"))
-    norm(hf, "hub", "c", "h").unionByName(norm(af, "auth", "p", "a"))
+    def norm(df: DataFrame, side: String) =
+      df.crossJoin(broadcast(df.agg(sum(col("v")).as("tot"))))
+        .select(lit(side).as("side"), col("n").as("node"),
+          expr(s"CAST((v * $HitsTot) div tot AS BIGINT)").as("score"))
+    norm(h, "hub").unionByName(norm(a, "auth"))
   }
 
   /** k for the registered k-core query. */

@@ -178,18 +178,10 @@ object TfIdfQueries extends QueryPack {
     * passing). Mirrors the reference order: stopword filter BEFORE stemming
     * (DocumentFreq.java:66-69).
     */
-  /** Stem-map side table for the stemmed oracles. Resolution order:
-    * `-Dgraft.stemmap.path=...`, `$GRAFT_STEMMAP_PATH`, then a
-    * working-directory-relative default — no machine-specific absolute
-    * path baked into main code (r2 ADVICE). The oracle SQL needs a real
-    * filesystem path (DuckDB read_csv), so a classpath resource can't
-    * serve here.
+  /** Stem-map side table for the stemmed oracles, at the path its
+    * generator writes ([[graft.GenStemMap.DefaultOut]]).
     */
-  private val StemMapPath: String =
-    sys.props.get("graft.stemmap.path")
-      .orElse(sys.env.get("GRAFT_STEMMAP_PATH"))
-      .getOrElse(new java.io.File("src/test/resources/stemmap.tsv")
-        .getAbsolutePath)
+  private val StemMapPath: String = graft.GenStemMap.DefaultOut
 
   private def termsCte(stem: Boolean): String = {
     val rawCtes =

@@ -21,6 +21,11 @@ object GraftSqlBridge {
   def cacheManagerIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
 
+  /** `s` with every field nullable, nested ones too — the schema Spark's
+    * file readers report for what was written with `s`.
+    */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** The analyzed logical plan of a DataFrame — input side of custom
     * logical-plan construction (graft.plans.AsOfJoin).
     */
