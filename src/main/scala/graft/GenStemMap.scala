@@ -14,7 +14,11 @@ import graft.text.{PorterStemmer, Tokenize}
   * the term are indistinguishable from fallback, and any UNcovered term whose
   * stem differs fails the hash compare, which is exactly the signal we want).
   *
-  *   sbt "runMain graft.GenStemMap"
+  *   sbt "runMain graft.GenStemMap [out.tsv [dataDir ...]]"
+  *
+  * With no data dirs, it reads `sf0.001`, `sf0.01` and `sf0.1` under
+  * the testdata root: `-Dgraft.testdata.root=...`, then
+  * `$GRAFT_TESTDATA_ROOT`, then the location TESTDATA.md documents.
   */
 object GenStemMap {
   /** Where the map lives: `-Dgraft.stemmap.path=...`, then
@@ -29,14 +33,21 @@ object GenStemMap {
       .getOrElse(new java.io.File("src/test/resources/stemmap.tsv")
         .getAbsolutePath)
 
+  private def testdataRoot: String =
+    sys.props.get("graft.testdata.root")
+      .orElse(sys.env.get("GRAFT_TESTDATA_ROOT"))
+      .getOrElse("/root/testdata")
+
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else DefaultOut
+    val dirs = if (args.length > 1) args.toSeq.tail
+      else Seq("sf0.001", "sf0.01", "sf0.1").map(sf => s"$testdataRoot/$sf")
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val vocab = Seq("sf0.001", "sf0.01", "sf0.1")
-      .map(sf => Tables.load(spark, s"/root/testdata/$sf", "documents")
+    val vocab = dirs
+      .map(d => Tables.load(spark, d, "documents")
         .select(Tokenize.explodeTokens(col("text")).as("t"))
         .filter(col("t") =!= ""))
       .reduce(_ union _)

@@ -21,6 +21,10 @@ import graft.pos.PosTagger
   *   hadoop jar IDF.jar IDF <in> <out> -skippatterns s.txt -tsv df.tsv
   *     -> runMain graft.cli.IdfJob <in> <out> -skippatterns s.txt -tsv df.tsv
   *
+  * DocumentFreqJob and IdfJob tokenize one line at a time in the scan
+  * tasks, as the reference's mappers do (one `map()` call per line); see
+  * [[Jobs.corpusTerms]].
+  *
   * Two differences by design:
   *   - the reference's two-job chain materializes the DF table and re-reads
   *     it via distributed cache; IdfJob accepts the same `-tsv` file for
@@ -78,15 +82,25 @@ object Jobs {
         java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  def corpusTerms(spark: SparkSession, f: Flags): DataFrame = {
-    val docs = TextCorpus.documents(spark, f.in)
-    // terms() uses the bundled stopword set; honor a custom -skippatterns
-    // file by filtering with the caller-provided set instead.
-    val toks = docs.select(col("doc_id"),
-      graft.text.Tokenize.explodeTokens(col("text"), f.caseSensitive).as("token"))
-    toks.filter(!col("token").isInCollection(stopwords(f.skipPatterns)))
+  /** (doc_id, term) rows for the DF and IDF jobs, tokenized per line
+    * straight off [[TextCorpus.lines]]. Explode, the stopword `InSet`
+    * filter, stemming and the partial (doc_id, term) count of the caller's
+    * groupBy all run in the scan tasks, before the first shuffle.
+    *
+    * The terms equal those of the whole-document tokenization
+    * (`TfIdf.terms(TextCorpus.documents(...))`): `Tokenize.clean` turns a
+    * line terminator into a separator, and the extra empty tokens that a
+    * per-line split yields at line edges are removed by the stopword set's
+    * `""` entry. A `-skippatterns` file without a blank line has no `""`
+    * entry, so its empty tokens survive, one per separator-led or
+    * separator-ended line.
+    */
+  def corpusTerms(spark: SparkSession, f: Flags): DataFrame =
+    TextCorpus.lines(spark, f.in)
+      .select(col("doc_id"),
+        graft.text.Tokenize.explodeTokens(col("line"), f.caseSensitive).as("token"))
+      .filter(!col("token").isInCollection(stopwords(f.skipPatterns)))
       .select(col("doc_id"), TfIdf.stemCol(col("token")).as("term"))
-  }
 }
 
 /** POS tag counting over a text directory -> `TAG\tCOUNT` (POS.java). */
@@ -141,9 +155,9 @@ object IdfJob {
       case None => // single-program shape: derive in-flight
         TfIdf.topTerms(TfIdf.documentFrequencyFromTf(tfAll), 100)
     }
-    val scored = TfIdf.scores(
-      tfAll.join(broadcast(dfTable.select("term")), Seq("term"), "left_semi"),
-      dfTable, corpusConstant = 10000.0)
+    // scores' inner broadcast join keeps only the DF table's terms, so the
+    // table is read and broadcast once.
+    val scored = TfIdf.scores(tfAll, dfTable, corpusConstant = 10000.0)
       .select(col("doc_id"), col("term"), col("score"))
     Tsv.write(scored, f.out)
   }

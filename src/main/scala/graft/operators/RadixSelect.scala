@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed k-th order statistic over a NON-NEGATIVE int64 column with
@@ -64,6 +64,18 @@ object RadixSelect {
       mx: Option[Long] = None): Long =
     ranks(values, valueCol, Seq(k), mx)(k)
 
+  /** The `mx` argument from a caller's own one-row aggregate, whose `mx`
+    * field is max(value). That max is null over an empty relation; unboxed
+    * as it is, it would read 0 and the selection would fail later with a
+    * misleading message, so it fails here with the operator's own.
+    */
+  def maxOf(row: Row): Option[Long] = {
+    require(!row.isNullAt(row.fieldIndex("mx")), EmptyRelation)
+    Some(row.getAs[Long]("mx"))
+  }
+
+  private val EmptyRelation = "rank selection over an empty relation"
+
   /** Values live entirely below 2^60 by contract: the first-level prefix
     * (`value div 2^startPrev`) must be 0 for every row, else those rows
     * silently vanish from every count and the ranks come back wrong.
@@ -118,7 +130,7 @@ object RadixSelect {
       // cast: accept any integral value column (ADVICE r15 — getLong on an
       // IntegerType column throws; `div` results were always LongType).
       val mxRow = values.agg(max(col(valueCol).cast("long")).as("m")).collect()(0)
-      require(!mxRow.isNullAt(0), "rank selection over an empty relation")
+      require(!mxRow.isNullAt(0), EmptyRelation)
       mxRow.getLong(0)
     }
     requireInRange(mxV)

@@ -263,7 +263,7 @@ object DecisionQueries extends QueryPack {
       // All three order statistics narrow through the SAME radix passes
       // (RadixSelect.ranks, r15): 3x5 counting aggregations -> 2.
       val r = graft.operators.RadixSelect.ranks(v, "v", Seq(kMed, kLo, kHi),
-        Some(nmx.getAs[Long]("mx")))
+        graft.operators.RadixSelect.maxOf(nmx))
       val (med, lo, hi) = (r(kMed), r(kLo), r(kHi))
       s.range(1).select(lit(n).as("n"),
         round(lit(med).cast("double") / 100.0, 2).as("median_usd"),
@@ -290,7 +290,7 @@ object DecisionQueries extends QueryPack {
       val kHi = n + 1 - kLo
       // Both trim bounds in one multi-rank narrowing (RadixSelect.ranks).
       val r = graft.operators.RadixSelect.ranks(v, "v", Seq(kLo, kHi),
-        Some(nmx.getAs[Long]("mx")))
+        graft.operators.RadixSelect.maxOf(nmx))
       val (lo, hi) = (r(kLo), r(kHi))
       v.filter(col("v") >= lo && col("v") <= hi)
         .agg(count(lit(1)).as("n_kept"),
@@ -321,7 +321,7 @@ object DecisionQueries extends QueryPack {
       val kHi = n + 1 - kLo
       // Both winsor bounds in one multi-rank narrowing (RadixSelect.ranks).
       val r = graft.operators.RadixSelect.ranks(v, "v", Seq(kLo, kHi),
-        Some(nmx.getAs[Long]("mx")))
+        graft.operators.RadixSelect.maxOf(nmx))
       val (lo, hi) = (r(kLo), r(kHi))
       v.select(greatest(lit(lo), least(lit(hi), col("v"))).as("w"))
         .agg(count(lit(1)).as("n"),

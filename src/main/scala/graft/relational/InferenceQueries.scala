@@ -490,7 +490,7 @@ object InferenceQueries extends QueryPack {
       val nTot = nmx.getAs[Long]("n")
       val m = graft.operators.RadixSelect.kth(
         ev.select(col("c").as("v")), "v", (nTot + 1) / 2,
-        Some(nmx.getAs[Long]("mx")))
+        graft.operators.RadixSelect.maxOf(nmx))
       val g = ev.groupBy("event_type")
         .agg(count(lit(1)).as("ng"),
           sum(when(col("c") > m, 1L).otherwise(0L)).as("ag"))

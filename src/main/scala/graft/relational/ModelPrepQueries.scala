@@ -239,7 +239,7 @@ object ModelPrepQueries extends QueryPack {
       val nCal = nmx.getAs[Long]("n")
       val kk = math.min((9L * (nCal + 1) + 9) / 10, nCal)
       val qhat9 = graft.operators.RadixSelect.kth(resid, "r", kk,
-        Some(nmx.getAs[Long]("mx")))
+        graft.operators.RadixSelect.maxOf(nmx))
       li.filter(col("fold") === 2)
         .crossJoin(broadcast(coef))
         .groupBy("n_train", "b9")

@@ -33,6 +33,12 @@ object TextCorpus {
     * nondeterministic. monotonically_increasing_id encodes
     * (partition index, row position), and text-file splits map to
     * partitions in file order, so sorting by it restores line order.
+    *
+    * The regroup is a shuffle on doc_id, and everything downstream of it
+    * runs after that shuffle. Consumers that only tokenize should read
+    * [[lines]] instead, as the CLI DF and IDF jobs do
+    * (`graft.cli.Jobs.corpusTerms`): tokens never span a line, so the
+    * per-line terms are the same and are made in the scan tasks.
     */
   def documents(spark: SparkSession, dir: String): DataFrame =
     lines(spark, dir)

@@ -15,6 +15,12 @@ import graft.functions.StemExpr
   *      ├─► TF      = tokens ⋉ broadcast(top-k) → count(doc,term)   [J1,A4/5]
   *      └─► score   = TF ⨝ broadcast(DF) → tf·ln(N/(df+1))          [J2,P9]
   *
+  * `terms` reads whole documents. The CLI DF and IDF jobs feed the same
+  * clean ─ split ─ explode ─ filter ─ stem chain one line at a time
+  * instead (`graft.cli.Jobs.corpusTerms`), as the reference's mappers do:
+  * the terms are the same, and the chain runs in the scan tasks with no
+  * regroup shuffle in front of it.
+  *
   * Scale notes (100 TB): the only wide exchanges are the two groupBys
   * (partial/final HashAggregate — the stripes pattern, automatic), both keyed
   * on high-cardinality (term) / (doc_id, term). Both joins broadcast the

@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-/** Regression coverage for the ADVICE r10 degenerate-input findings: the
-  * sf0.01 oracle corpus never exercises these shapes (no empty document,
-  * no single-candidate MMR pool), so the hash gate alone would keep
-  * passing while a real corpus crashed or silently dropped rows.
+/** Regression coverage for the ADVICE r10 and r16 degenerate-input
+  * findings: the sf0.01 oracle corpus never exercises these shapes (no
+  * empty document, no single-candidate MMR pool, no empty table), so the
+  * hash gate alone would keep passing while a real corpus crashed or
+  * silently dropped rows.
   */
 class DegenerateInputSpec extends SparkSpec {
 
@@ -38,6 +39,17 @@ class DegenerateInputSpec extends SparkSpec {
     assert(rows.length == 2, rows.mkString(", "))
     assert(rows.forall(_.getAs[Int]("mmr_rank") == 1))
     assert(rows.map(_.getAs[Long]("q_id")).sorted.toSeq == Seq(0L, 1L))
+  }
+
+  test("q_stats_trimmed_mean over an empty lineitem fails with the empty-relation message") {
+    val dir = Files.createTempDirectory("graft-degen-empty").toString
+    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    // Pre-fix the null max(v) unboxed as 0 and the ranks check failed first.
+    val e = try intercept[IllegalArgumentException] {
+      SparkEntry.queries("q_stats_trimmed_mean")(spark, dir)
+    } finally CacheScope.releaseAll()
+    assert(e.getMessage.contains("rank selection over an empty relation"), e.getMessage)
   }
 
   test("resolveReliableDir: explicit dir wins; local master ignores session dir") {
