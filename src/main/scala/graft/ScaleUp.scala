@@ -34,9 +34,33 @@ object ScaleUp {
     "region" -> Seq(),
     "nation" -> Seq())
 
+  private val Usage = "usage: runMain graft.ScaleUp <srcDir> <outDir> <replicas>"
+
+  /** (srcDir, outDir, replicas) from the command line, replicas >= 1. */
+  private[graft] def parse(args: Array[String]): Option[(String, String, Int)] =
+    args match {
+      case Array(src, out, r) => r.toIntOption.filter(_ >= 1).map((src, out, _))
+      case _ => None
+    }
+
+  /** Replicas stay disjoint only while every shifted key is below [[Off]]:
+    * a key at or above it would collide with the next replica's copy.
+    */
+  private[graft] def requireBelowOff(t: String, base: DataFrame, shifts: Seq[String]): Unit =
+    if (shifts.nonEmpty) {
+      val mx = base.select(shifts.map(c => max(col(c).cast("long"))): _*).head()
+      shifts.indices.foreach { i =>
+        require(mx.isNullAt(i) || mx.getLong(i) < Off,
+          s"ScaleUp: $t.${shifts(i)} reaches ${mx.get(i)}, not below the replica " +
+            s"offset $Off, so its replicas would share keys")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
-    val Array(src, out, kStr) = args.take(3)
-    val k = kStr.toInt
+    val (src, out, k) = parse(args).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -50,6 +74,7 @@ object ScaleUp {
       // rewritten copy round-trips as plain TimestampType).
       val base = Tables.load(spark, src, t)
       val shifts = keyCols(t)
+      requireBelowOff(t, base, shifts)
       val reps = if (shifts.isEmpty) 1 else k
       val scaled: DataFrame = (0 until reps).map { r =>
         shifts.foldLeft(base)((df, c) =>

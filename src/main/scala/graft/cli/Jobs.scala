@@ -88,8 +88,8 @@ object Jobs {
     * groupBy all run in the scan tasks, before the first shuffle.
     *
     * The terms equal those of the whole-document tokenization
-    * (`TfIdf.terms(TextCorpus.documents(...))`): `Tokenize.clean` turns a
-    * line terminator into a separator, and the extra empty tokens that a
+    * (`TfIdf.terms(TextCorpus.documents(...))`): `Tokenize.scan` reads a
+    * line terminator as a separator, and the extra empty tokens that a
     * per-line split yields at line edges are removed by the stopword set's
     * `""` entry. A `-skippatterns` file without a blank line has no `""`
     * entry, so its empty tokens survive, one per separator-led or
@@ -112,8 +112,7 @@ object PosJob {
   def run(spark: SparkSession, args: Array[String]): Unit = {
     val f = Jobs.parse(args)
     val counts = TextCorpus.lines(spark, f.in)
-      .select(explode(regexp_extract_all(col("line"),
-        lit(PosTagger.TokenPattern), lit(0))).as("token"))
+      .select(explode(PosTagger.tokens(col("line"))).as("token"))
       .select(PosTagger.tagColumn(col("token")).as("tag"))
       .groupBy("tag").agg(count(lit(1)).as("cnt"))
     Tsv.write(counts, f.out)

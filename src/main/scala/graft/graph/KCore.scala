@@ -91,8 +91,16 @@ object KCore {
     val ePart = e0.repartition(parts, col("src"))
     var e = pin(if (seedLocal) {
       import e0.sparkSession.implicits._
-      ePart.select(col("src"), col("dst")).as[(Long, Long)]
+      val seed = ePart.select(col("src"), col("dst")).as[(Long, Long)]
         .mapPartitions(localPeel(k)).toDF("src", "dst")
+      // In one partition the local peel is the whole peel. Across
+      // partitions, a node peeled in its own partition keeps its in-edges
+      // in the others, and with no src row left it is never counted as
+      // sub-k, so round 1 would confirm a core that still points at it.
+      // Dropping edges to such nodes makes the seed symmetric again.
+      if (parts == 1) seed
+      else seed.join(seed.select(col("src").as("node")).distinct(),
+        col("dst") === col("node"), "left_semi")
     } else ePart)
     var survivors: DataFrame = null
     Fixpoint.until("KCore.kcore", maxRounds) { _ =>

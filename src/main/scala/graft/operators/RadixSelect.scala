@@ -35,7 +35,9 @@ import org.apache.spark.sql.functions._
   *    no group is live at is skipped outright.
   *  - Callers that already aggregate over `values` (for n / per-group n)
   *    can fold max(value) into that SAME job and pass it via `mx` /
-  *    `maxes`, eliminating the operator's own max() pass.
+  *    `maxes`, eliminating the operator's own max() pass. It must be the
+  *    TRUE max: the first live level's count checks it (a value above it
+  *    fails the call) at no extra pass.
   *
   * CURSOR-COUNT BOUND: each level's prefix filter is an OR-chain with one
   * disjunct per live (group, prefix) cursor. The expression tree (and its
@@ -84,6 +86,20 @@ object RadixSelect {
   private def requireInRange(mx: Long): Unit =
     require(mx < (1L << 60),
       s"RadixSelect: max(value) = $mx breaches the < 2^60 contract")
+
+  /** A caller-supplied max must be the true max(value). When it is, every
+    * row has prefix 0 at the first live level, so that level counts
+    * without the prefix filter and costs no extra pass; a bucket above
+    * the max's own shows a larger value, which every later level's prefix
+    * filter would silently drop.
+    */
+  private def requireTrueMax(buckets: Iterable[Long], mx: Long, sh: Int,
+      what: String): Unit =
+    buckets.find(_ > (mx >> sh)).foreach { b =>
+      throw new IllegalArgumentException(
+        s"RadixSelect: values$what reach at least ${b << sh}, above the supplied max $mx " +
+          "— mx/maxes must be the true max(value)")
+    }
 
   /** The counting levels actually worth running for values in [0, mx]:
     * a level whose whole span exceeds mx maps every row to bucket 0 and
@@ -140,16 +156,20 @@ object RadixSelect {
     var state: Map[Long, (Long, Long)] = ks.distinct.map(k => k -> (k, 0L)).toMap
     for (sh <- levels) {
       val ratio = 1L << (prev - sh)
+      val first = sh == levels.head
       val livePrefixes = state.values.map(_._2).toSeq.distinct
-      val inPfx = livePrefixes
-        .map(p => expr(s"$valueCol div ${1L << prev}") === lit(p))
-        .reduce(_ || _)
+      val inPfx =
+        if (first) col(valueCol).isNotNull // every prefix is 0: see requireTrueMax
+        else livePrefixes
+          .map(p => expr(s"$valueCol div ${1L << prev}") === lit(p))
+          .reduce(_ || _)
       val cnt = values.filter(inPfx)
         .groupBy(expr(s"$valueCol div ${1L << sh}").as("b"))
         .agg(count(lit(1)).as("t"))
         .collect()
         .map(r => (r.getAs[Long]("b"), r.getAs[Long]("t")))
         .sortBy(_._1)
+      if (first) requireTrueMax(cnt.map(_._1), mxV, sh, "")
       state = state.map { case (k0, (kk, pfx)) =>
         val (b, base) = descend(cnt.filter(_._1 / ratio == pfx), kk, "")
         k0 -> (kk - base, b)
@@ -220,9 +240,12 @@ object RadixSelect {
       val livePrefixes = state.toSeq
         .collect { case ((g, _), (_, pfx)) if liveGroups(g) => (g, pfx) }
         .distinct
+      // groups counted for the first time: every prefix is 0 (requireTrueMax)
+      val firstGroups = liveGroups.filter(g => levelsByG(g)._1.head == sh)
       val inPrefix = livePrefixes.map { case (g, pfx) =>
-        (col(groupCol) === g) &&
-          (expr(s"$valueCol div ${1L << prevByG(g)}") === lit(pfx))
+        (col(groupCol) === g) && (
+          if (firstGroups(g)) col(valueCol).isNotNull
+          else expr(s"$valueCol div ${1L << prevByG(g)}") === lit(pfx))
       }.reduce(_ || _)
       val cnt = values.filter(inPrefix)
         .groupBy(col(groupCol).as("g"),
@@ -230,6 +253,10 @@ object RadixSelect {
         .agg(count(lit(1)).as("t"))
         .collect()
         .groupBy(_.getAs[String]("g"))
+      firstGroups.foreach { g =>
+        requireTrueMax(cnt.getOrElse(g, Array.empty).map(_.getAs[Long]("b")),
+          mxByG(g), sh, s" of group '$g'")
+      }
       state = state.map {
         case ((g, k0), (kk, pfx)) if liveGroups(g) =>
           val ratio = 1L << (prevByG(g) - sh)

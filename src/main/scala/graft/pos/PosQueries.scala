@@ -10,10 +10,11 @@ import graft.{QueryPack, Tables}
   * comparison), over `documents.text`:
   *
   *   pos_pairs   — A1 (POS.java:33-57): tokenize → tag → emit (tag, 1) →
-  *                 sum. Declarative: explode + codegen'd CASE tagger +
-  *                 groupBy(tag).count(). Catalyst's partial/final
-  *                 HashAggregate IS the map-side combine the reference
-  *                 declined (its combiner is commented out, POS.java:66).
+  *                 sum. Declarative: explode of the byte-scanner tokens +
+  *                 codegen'd native tagger + groupBy(tag).count().
+  *                 Catalyst's partial/final HashAggregate IS the map-side
+  *                 combine the reference declined (its combiner is
+  *                 commented out, POS.java:66).
   *
   *   pos_stripes — A2 (POSstripes.java:30-75): per-task associative-array
   *                 pre-aggregation, then merge. Implemented LITERALLY via
@@ -34,7 +35,7 @@ object PosQueries extends QueryPack {
 
   private def pairs(s: SparkSession, d: String): DataFrame =
     Tables.load(s, d, "documents")
-      .select(explode(regexp_extract_all(col("text"), lit(TokenPattern), lit(0))).as("token"))
+      .select(explode(tokens(col("text"))).as("token"))
       .select(tagColumn(col("token")).as("tag"))
       .groupBy("tag")
       .agg(count(lit(1)).as("cnt"))

@@ -1,24 +1,14 @@
 package graft.pos
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
 
-/** Tokenization + part-of-speech tagging for the POS/POSstripes parity
-  * queries (POS.java:33-41, POSstripes.java:30-49).
-  *
-  * The reference tags with a pre-trained OpenNLP maxent model whose file is
-  * hardcoded to the author's laptop (POS.java:23) and is unavailable offline,
-  * so — per SURVEY.md §7's decision — the tagger is PLUGGABLE and the default
-  * is a deterministic rule-based UD-style tagger. The rules live in ONE
-  * table below, from which the Scala function, the Catalyst Column
-  * expression, and the DuckDB oracle SQL are all generated, so the three can
-  * never diverge.
-  *
-  * Tokenization follows OpenNLP SimpleTokenizer's character-class principle
-  * (split at letter/digit/other class changes, drop whitespace), expressed as
-  * a single regex so it is identical in Spark and DuckDB:
-  * letters-run | digits-run | other-run.
-  */
+import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{PosTag, PosTokens}
+
 /** Pluggable tagging surface (SURVEY.md §7's decision for the offline-
   * unavailable OpenNLP model): implementations must be Serializable so
   * executors can construct them; heavyweight models should be loaded
@@ -96,9 +86,28 @@ object OpenNlpTagger {
     })
 }
 
+/** Tokenization + part-of-speech tagging for the POS/POSstripes parity
+  * queries (POS.java:33-41, POSstripes.java:30-49).
+  *
+  * The reference tags with a pre-trained OpenNLP maxent model whose file is
+  * hardcoded to the author's laptop (POS.java:23) and is unavailable offline,
+  * so — per SURVEY.md §7's decision — the tagger is PLUGGABLE and the default
+  * is a deterministic rule-based UD-style tagger. The rules live in ONE
+  * table below: the Scala function [[tag]] reads it through a precomputed
+  * word map, the Catalyst expression [[tagColumn]] runs that function, and
+  * the DuckDB oracle SQL [[tagSql]] is generated from it.
+  *
+  * Tokenization follows OpenNLP SimpleTokenizer's character-class principle
+  * (split at letter/digit/other class changes, drop whitespace), defined as
+  * the regex [[TokenPattern]] (letters-run | digits-run | other-run), which
+  * the DuckDB oracle runs. The engine runs the byte scanner [[scan]], held
+  * to that regex by TokenScannerSpec.
+  */
 object PosTagger {
 
-  /** Character-class tokenizer regex (Java + RE2 compatible). */
+  /** Character-class tokenizer regex (Java + RE2 compatible): the oracle's
+    * tokenizer and the definition [[scan]] is held to.
+    */
   val TokenPattern = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]+"
 
   /** Closed-class word lists, checked in order, on the lowercased token. */
@@ -124,40 +133,47 @@ object PosTagger {
 
   val Default = "NOUN"
 
-  /** Plain-Scala tagger (used by the mapPartitions/stripes path). */
+  /** [[WordClasses]] as one lookup; a word listed twice keeps its first class. */
+  private val WordClass: Map[String, String] =
+    WordClasses.flatMap { case (t, ws) => ws.map(_ -> t) }.distinctBy(_._1).toMap
+
+  /** The rule-based tagger (the stripes path, and through [[tagUtf8]] the
+    * Catalyst one).
+    */
   def tag(token: String): String = {
     if (token.isEmpty) return Default
     if (token.forall(c => c >= '0' && c <= '9')) return "NUM"
-    // ASCII letter check, matching the Column/SQL '[a-zA-Z]' semantics.
+    // ASCII letter check, matching the SQL '[a-zA-Z]' semantics.
     if (!token.exists(c => (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')))
       return "PUNCT"
     val lc = token.toLowerCase(java.util.Locale.ROOT)
-    WordClasses.foreach { case (t, ws) => if (ws.contains(lc)) return t }
-    SuffixClasses.foreach { case (t, sufs) =>
-      if (sufs.exists(sf => lc.length > sf.length + 1 && lc.endsWith(sf))) return t
+    WordClass.get(lc) match {
+      case Some(t) => t
+      case None =>
+        // length in code points, as SQL's length() counts them
+        val n = lc.codePointCount(0, lc.length)
+        SuffixClasses.collectFirst {
+          case (t, sufs) if sufs.exists(sf => n > sf.length + 1 && lc.endsWith(sf)) => t
+        }.getOrElse(Default)
     }
-    Default
   }
 
-  /** Same rules as a Catalyst CASE expression (codegen'd, for the pairs
-    * path — no UDF in the hot loop).
+  /** Every tag [[tag]] can return, encoded once. */
+  private val TagUtf8: Map[String, UTF8String] =
+    ((Default +: "NUM" +: "PUNCT" +: WordClasses.map(_._1)) ++ SuffixClasses.map(_._1))
+      .map(t => t -> UTF8String.fromString(t)).toMap
+
+  /** [[tag]] over a Catalyst string; a null token tags as [[Default]], as
+    * [[tagSql]]'s CASE does.
     */
-  def tagColumn(tok: Column): Column = {
-    val lc = lower(tok)
-    // Build the CASE chain in rule order. The leading empty-token arm
-    // mirrors tag()'s guard — unreachable via TokenPattern, but all three
-    // variants are public API and must stay rule-for-rule identical.
-    var c: Column = when(tok === lit(""), Default)
-      .when(tok.rlike("^[0-9]+$"), "NUM")
-      .when(!tok.rlike("[a-zA-Z]"), "PUNCT")
-    WordClasses.foreach { case (t, ws) => c = c.when(lc.isin(ws: _*), t) }
-    SuffixClasses.foreach { case (t, sufs) =>
-      val cond = sufs.map(sf =>
-        lc.endsWith(sf) && length(lc) > sf.length + 1).reduce(_ || _)
-      c = c.when(cond, t)
-    }
-    c.otherwise(Default)
-  }
+  def tagUtf8(token: UTF8String): UTF8String =
+    TagUtf8(if (token == null) Default else tag(token.toString))
+
+  /** Same rules as a native Catalyst expression over [[tag]] (codegen'd,
+    * for the pairs path — no UDF in the hot loop).
+    */
+  def tagColumn(tok: Column): Column =
+    GraftSqlBridge.column(PosTag(GraftSqlBridge.expression(tok)))
 
   /** Same rules as DuckDB SQL over a token expression. */
   def tagSql(tok: String): String = {
@@ -178,8 +194,61 @@ object PosTagger {
     sb.toString
   }
 
-  /** Scala-side tokenizer mirroring TokenPattern (for mapPartitions). */
-  private val tokenRegex = TokenPattern.r
+  private final val Letter = 0
+  private final val Digit = 1
+  private final val Space = 2
+  private final val Other = 3
+
+  /** Class of each ASCII byte: letters, digits, Java's `\s`
+    * (`[ \t\n\x0B\f\r]`) and other.
+    */
+  private val AsciiClass: Array[Byte] = Array.tabulate[Byte](128) { c =>
+    if ((c | 0x20) >= 'a' && (c | 0x20) <= 'z') Letter
+    else if (c >= '0' && c <= '9') Digit
+    else if (c == ' ' || (c >= '\t' && c <= '\r')) Space
+    else Other
+  }
+
+  /** [[TokenPattern]]'s tokens of a line in one pass over its UTF-8 bytes:
+    * maximal runs of one class, whitespace runs dropped. A byte >= 0x80
+    * belongs to a non-ASCII code point, which is always "other", so the
+    * scanner never decodes; a surrogate pair stays inside its run.
+    *
+    * Malformed UTF-8 bytes are >= 0x80 too, so they are "other" like the
+    * U+FFFD that a decoding regex would see in their place: the token
+    * boundaries and the tags are the same, but the token keeps the raw
+    * bytes where the regex's token holds U+FFFD. Tokens are views into one
+    * copy of the line per call.
+    */
+  def scan(line: UTF8String): ArrayData = {
+    val n = line.numBytes
+    val bytes = new Array[Byte](n)
+    line.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET)
+    val out = ArrayBuffer.empty[Any]
+    var i = 0
+    while (i < n) {
+      val cls = classOf(bytes(i))
+      val start = i
+      i += 1
+      while (i < n && classOf(bytes(i)) == cls) i += 1
+      if (cls != Space) out += UTF8String.fromBytes(bytes, start, i - start)
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  @inline private def classOf(b: Byte): Int = if (b < 0) Other else AsciiClass(b)
+
+  /** Line -> array of [[TokenPattern]] tokens, by [[scan]]. */
+  def tokens(line: Column): Column =
+    GraftSqlBridge.column(PosTokens(GraftSqlBridge.expression(line)))
+
+  /** [[scan]] for a Scala string (the stripes path). A lone surrogate,
+    * which is not valid UTF-16, encodes as `?`, an "other" byte.
+    */
   def tokenize(line: String): Iterator[String] =
-    if (line == null) Iterator.empty else tokenRegex.findAllIn(line)
+    if (line == null) Iterator.empty
+    else {
+      val toks = scan(UTF8String.fromString(line))
+      Iterator.tabulate(toks.numElements())(toks.getUTF8String(_).toString)
+    }
 }

@@ -37,7 +37,7 @@ object Stopwords {
   }
 
   /** Entries that can actually match a cleaned token (letters only, as
-    * produced by Tokenize.clean — `[^a-zA-Z ]` removal). Used to build the
+    * produced by Tokenize.scan — `[^a-zA-Z ]` removal). Used to build the
     * DuckDB oracle SQL, where the unreachable entries would be noise.
     * Includes "" (the blank-line entry) because a leading separator in the
     * tokenizer yields an empty token that the reference then skips.

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{array, col, explode, struct}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.graph.{GraphPathQueries, GraphQueries}
@@ -161,6 +162,31 @@ class GraphSpec extends SparkSpec {
       finally CacheScope.releaseAll()
     }
     assert(thrown.getMessage.contains("confirmed fixpoint"))
+  }
+
+  test("k-core seed at two state partitions: a peeled pendant's in-edges go too") {
+    // 180,000 disjoint triangles (1.08M directed edges) make
+    // Fixpoint.stateParts = 2, so the partition-local seed sees only part
+    // of node 1's neighbourhood. Planted: triangle {1,2,3} plus 40
+    // pendants on node 1. A pendant peeled in its own partition must not
+    // leave (1, pendant) behind in node 1's.
+    val a = col("id") * 3 + 1000
+    val filler = spark.range(180000L)
+      .select(explode(array(Seq((0, 1), (0, 2), (1, 2)).flatMap { case (i, j) =>
+        Seq(struct((a + i).as("src"), (a + j).as("dst")),
+          struct((a + j).as("src"), (a + i).as("dst")))
+      }: _*)).as("e"))
+      .select(col("e.src"), col("e.dst"))
+    val planted = edgesDf(sym((1L, 2L), (2L, 3L), (1L, 3L)) ++
+      sym((100L until 140L).map(t => (1L, t)): _*), 2)
+    val edges = filler.union(planted)
+    assert(graft.Fixpoint.stateParts(spark.sparkContext, 1080086L) == 2)
+    val core =
+      try graft.graph.KCore.kcore(edges, k = 2)
+        .filter(col("node") < 1000).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally CacheScope.releaseAll()
+    assert(core == Map(1L -> 2L, 2L -> 2L, 3L -> 2L), s"got $core")
   }
 
   test("k-core of a graph with no k-core is empty, and converges") {

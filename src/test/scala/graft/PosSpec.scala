@@ -6,7 +6,8 @@ import graft.pos.{PosQueries, PosTagger}
 
 /** A1 ≡ A2: the pairs and stripes pipelines must agree exactly (the
   * reference's own equivalence claim, PDF p.1), and the three tagger
-  * encodings (Scala function / Catalyst CASE / oracle SQL) must agree.
+  * encodings (Scala function / native Catalyst expression / oracle SQL)
+  * must agree (TokenScannerSpec adds the oracle SQL on random strings).
   */
 class PosSpec extends SparkSpec {
   import spark.implicits._

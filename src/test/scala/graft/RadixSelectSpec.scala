@@ -118,6 +118,26 @@ class RadixSelectSpec extends SparkSpec {
     CacheScope.releaseAll()
   }
 
+  test("a caller max below the true max fails by name, in the first counting pass") {
+    import spark.implicits._
+    val vals: Seq[Long] = Seq(0L, 3L, 7L, 1L << 25, 987654321098L)
+    val df = vals.toDF("v").repartition(3).transform(CacheScope.persisted(_))
+    // 2^25 as the max skips the levels that would see 987654321098; the
+    // old prefix filter then dropped it and rank 5 came back as 2^25.
+    val e = intercept[IllegalArgumentException](
+      RadixSelect.ranks(df, "v", Seq(3L, 5L), Some(1L << 25)))
+    assert(e.getMessage.contains("above the supplied max 33554432"), e.getMessage)
+    // An over-stated max is harmless: the answer is exact.
+    assert(RadixSelect.kth(df, "v", 5L, Some(1L << 50)) == 987654321098L)
+    val g = (vals.map("a" -> _) ++ Seq("b" -> 1L, "b" -> 2L)).toDF("g", "v")
+    val eg = intercept[IllegalArgumentException](RadixSelect.kthByGroup(g, "g", "v",
+      Map("a" -> 3L, "b" -> 1L), Some(Map("a" -> 100L, "b" -> 2L))))
+    assert(eg.getMessage.contains("of group 'a'"), eg.getMessage)
+    assert(RadixSelect.kthByGroup(g, "g", "v", Map("a" -> 5L, "b" -> 2L),
+      Some(Map("a" -> 987654321098L, "b" -> 2L))) == Map("a" -> 987654321098L, "b" -> 2L))
+    CacheScope.releaseAll()
+  }
+
   test("contracts fail loudly: >= 2^60 values and cursor-count bound") {
     import spark.implicits._
     val big = Seq(1L << 61, 1L).toDF("v")
