@@ -660,10 +660,6 @@ object DedupQueries extends QueryPack {
        |  SELECT doc_id, ${SimHash.combineSql} AS simhash FROM lanes
        |)""".stripMargin
 
-  /** dedup_semdedup oracle: the shared quantized-element CTE + the SAME
-    * Ivf Params unrolled by Ivf.oracleCtes (cellall = the trained cell
-    * assignment), then the within-cell pair scan and keep rule in SQL.
-    */
   override val oracles: Map[String, String] = Map(
     "dedup_exact" ->
       """SELECT md5(text) AS text_md5, min(doc_id) AS keep_doc_id,

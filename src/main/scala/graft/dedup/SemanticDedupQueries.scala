@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryPack, Tables}
-import graft.sim.VecMath
+import graft.CacheScope.persisted
+import graft.sim.{Ivf, Lloyd, SimilarityQueries, VecMath}
 
 /** SEMANTIC (embedding-space) dedup — the family that catches paraphrase
   * and translation duplicates no lexical shingle overlap can see:
@@ -100,17 +101,8 @@ object SemanticDedupQueries extends QueryPack {
     * deterministic stand-in for SemDeDup's keep-farthest-from-centroid).
     */
   def semdedupOf(emb0: DataFrame): DataFrame = {
-    import graft.sim.Ivf
-    import graft.CacheScope.persisted
-    val p = Ivf.Params(k = SemK, iters = SemIters, nprobe = 1, topK = 1,
-      nQueries = 1)
-    val e = persisted(emb0
-      .select(col("vec_id"), VecMath.quantize(col("embedding")).as("qe"))
-      .select(col("vec_id"), col("qe"), VecMath.norm2Q(col("qe")).as("norm2")))
-    val ex = persisted(e.select(col("vec_id"),
-      posexplode(col("qe")).as(Seq("i", "qx"))))
-    val cells = Ivf.probeRanked(e, ex, p).filter(col("rn") === 1)
-      .select(col("vid"), col("cell"))
+    val e = quantized(emb0)
+    val cells = semdedupCells(emb0)
     // (vector, cell) with the quantized payload — feeds both sides of the
     // within-cell pair join, so quantize-once stays true in the plan.
     val ec = persisted(e.join(cells, e("vec_id") === cells("vid"))
@@ -138,19 +130,16 @@ object SemanticDedupQueries extends QueryPack {
     * assignment instead of re-running Lloyd (at 100 TB the assignment is
     * a managed table the audit reads, not a training job it repeats).
     */
-  def semdedupCells(emb0: DataFrame): DataFrame = {
-    import graft.sim.Ivf
-    import graft.CacheScope.persisted
-    val p = Ivf.Params(k = SemK, iters = SemIters, nprobe = 1, topK = 1,
-      nQueries = 1)
-    val e = persisted(emb0
-      .select(col("vec_id"), VecMath.quantize(col("embedding")).as("qe"))
-      .select(col("vec_id"), col("qe"), VecMath.norm2Q(col("qe")).as("norm2")))
-    val ex = persisted(e.select(col("vec_id"),
-      posexplode(col("qe")).as(Seq("i", "qx"))))
-    Ivf.probeRanked(e, ex, p).filter(col("rn") === 1)
-      .select(col("vid"), col("cell"))
-  }
+  def semdedupCells(emb0: DataFrame): DataFrame =
+    persisted(Lloyd.ranked(Lloyd.train(quantized(emb0), SemK, SemIters), 1)
+      .select(col("vid"), col("cell")))
+
+  /** (vec_id, qe, norm2), pinned: the quantized relation the quantizer
+    * trains on and the cosine scans read.
+    */
+  private def quantized(emb0: DataFrame): DataFrame = persisted(emb0
+    .select(col("vec_id"), VecMath.quantize(col("embedding")).as("qe"))
+    .select(col("vec_id"), col("qe"), VecMath.norm2Q(col("qe")).as("norm2")))
 
   /** The semdedup eval body over any (vec_id, embedding) relation —
     * public for planted-geometry specs. Truth = exact all-pairs
@@ -160,10 +149,7 @@ object SemanticDedupQueries extends QueryPack {
     */
   def semdedupEvalOf(emb0: DataFrame,
       cellsPre: Option[DataFrame] = None): DataFrame = {
-    import graft.CacheScope.persisted
-    val e = persisted(emb0
-      .select(col("vec_id"), VecMath.quantize(col("embedding")).as("qe"))
-      .select(col("vec_id"), col("qe"), VecMath.norm2Q(col("qe")).as("norm2")))
+    val e = quantized(emb0)
     val cells = cellsPre.getOrElse(semdedupCells(emb0))
     val truth = persisted(e.as("a")
       .join(broadcast(e.as("b")), col("a.vec_id") < col("b.vec_id"))
@@ -190,11 +176,15 @@ object SemanticDedupQueries extends QueryPack {
         safeRatio(col("n_hit"), col("n_cand")).as("precision"))
   }
 
-  private lazy val semdedupOracle: String = {
-    import graft.sim.{Ivf, SimilarityQueries}
-    val p = Ivf.Params(k = SemK, iters = SemIters, nprobe = 1, topK = 1,
-      nQueries = 1)
-    s"""${SimilarityQueries.eCte}${Ivf.oracleCtes(p)}, sdots AS (
+  /** The SemDeDup quantizer as [[Ivf]] dials, for the oracles' unrolled
+    * Lloyd CTEs; only `cellall` (rn = 1) is read, so the probe and query
+    * dials are inert.
+    */
+  private val SemIvfParams = Ivf.Params(k = SemK, iters = SemIters,
+    nprobe = 1, topK = 1, nQueries = 1)
+
+  private lazy val semdedupOracle: String =
+    s"""${SimilarityQueries.eCte}${Ivf.oracleCtes(SemIvfParams)}, sdots AS (
        |  SELECT a.vid AS va, b.vid AS vb,
        |         CAST(sum(ea.qx * eb.qx) AS DOUBLE) / 1000000.0 AS dot
        |  FROM cellall a
@@ -211,16 +201,12 @@ object SemanticDedupQueries extends QueryPack {
        |)
        |SELECT c.vid AS vec_id, c.cell, (s.vec_id IS NULL) AS kept
        |FROM cellall c LEFT JOIN sdrop s ON s.vec_id = c.vid""".stripMargin
-  }
 
   /** dedup_semdedup_eval oracle: exact all-pairs truth + same-cell
     * candidates (cellall from the shared Ivf CTEs), intersected.
     */
-  private lazy val semdedupEvalOracle: String = {
-    import graft.sim.{Ivf, SimilarityQueries}
-    val p = Ivf.Params(k = SemK, iters = SemIters, nprobe = 1, topK = 1,
-      nQueries = 1)
-    s"""${SimilarityQueries.eCte}${Ivf.oracleCtes(p)}, tdots AS (
+  private lazy val semdedupEvalOracle: String =
+    s"""${SimilarityQueries.eCte}${Ivf.oracleCtes(SemIvfParams)}, tdots AS (
        |  SELECT a.vec_id AS va, b.vec_id AS vb,
        |         CAST(sum(a.qx * b.qx) AS DOUBLE) / 1000000.0 AS dot
        |  FROM e a JOIN e b ON a.i = b.i AND a.vec_id < b.vec_id
@@ -248,7 +234,6 @@ object SemanticDedupQueries extends QueryPack {
        |       CASE WHEN n_cand = 0 THEN 1.0
        |            ELSE round(CAST(n_hit AS DOUBLE) / n_cand, 6) END AS precision
        |FROM agg""".stripMargin
-  }
 
   override val oracles: Map[String, String] = Map(
 

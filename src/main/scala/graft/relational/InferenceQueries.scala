@@ -66,6 +66,35 @@ object InferenceQueries extends QueryPack {
       .drop("us0", "us1")
   }
 
+  /** Friedman's blocked rank sums, shared by `q_stats_friedman` and Page's
+    * L: daily per-type sums, the COMPLETE day blocks (every type traded),
+    * doubled midranks r2 = 2·cntBelow + tieCnt + 1 from a day-keyed
+    * self-join, then (event_type, n, rj2) per type. Returns (k, sums),
+    * k = the one-row type count.
+    */
+  private def friedmanRankSums(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val daily = t(s, d, "events")
+      .groupBy(col("event_type"),
+        date_trunc("day", col("ts")).cast("date").as("day"))
+      .agg(sum(cents(col("value"))).as("x"))
+      .transform(graft.CacheScope.persisted(_))
+    val k = daily.agg(countDistinct(col("event_type")).as("k"))
+    val complete = daily.groupBy("day").agg(count(lit(1)).as("c"))
+      .crossJoin(broadcast(k)).filter(col("c") === col("k"))
+      .select(col("day"))
+    val blocks = daily.join(complete, "day")
+      .transform(graft.CacheScope.persisted(_))
+    val sums = blocks.as("a")
+      .join(blocks.select(col("day").as("bd"), col("x").as("bx")).as("b"),
+        col("a.day") === col("bd"))
+      .groupBy(col("a.day").as("day"), col("a.event_type").as("event_type"))
+      .agg((lit(2) * sum(when(col("bx") < col("a.x"), 1L).otherwise(0L)) +
+        sum(when(col("bx") === col("a.x"), 1L).otherwise(0L)) + 1).as("r2"))
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum(col("r2")).as("rj2"))
+    (k, sums)
+  }
+
   /** Cochran-Q presence threshold (cents): a (type, day) block cell is
     * "positive" when the type logged at least one event of value >= this
     * that day — ~p99 of the value distribution, so presence genuinely
@@ -342,26 +371,8 @@ object InferenceQueries extends QueryPack {
     // COMPLETE blocks (days where every type traded) enter, the
     // textbook requirement. χ² assembles on identical doubles.
     "q_stats_friedman" -> ((s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(col("event_type"),
-          date_trunc("day", col("ts")).cast("date").as("day"))
-        .agg(sum(cents(col("value"))).as("x"))
-        .transform(graft.CacheScope.persisted(_))
-      val k = daily.agg(countDistinct(col("event_type")).as("k"))
-      val complete = daily.groupBy("day").agg(count(lit(1)).as("c"))
-        .crossJoin(broadcast(k)).filter(col("c") === col("k"))
-        .select(col("day"))
-      val blocks = daily.join(complete, "day")
-        .transform(graft.CacheScope.persisted(_))
-      val rank2 = blocks.as("a")
-        .join(blocks.select(col("day").as("bd"), col("x").as("bx")).as("b"),
-          col("a.day") === col("bd"))
-        .groupBy(col("a.day").as("day"), col("a.event_type").as("event_type"))
-        .agg((lit(2) * sum(when(col("bx") < col("a.x"), 1L).otherwise(0L)) +
-          sum(when(col("bx") === col("a.x"), 1L).otherwise(0L)) + 1).as("r2"))
-      val sums = rank2.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("r2")).as("rj2"))
-        .transform(graft.CacheScope.persisted(_))
+      val (k, rankSums) = friedmanRankSums(s, d)
+      val sums = rankSums.transform(graft.CacheScope.persisted(_))
       val chi = sums.crossJoin(broadcast(k))
         .agg(first(col("k")).as("k"), first(col("n")).as("n"),
           sum(col("rj2") * col("rj2")).as("sr2"))
@@ -397,29 +408,10 @@ object InferenceQueries extends QueryPack {
       // midrank machinery q_stats_friedman benches raw end to end (its
       // registration above is untouched) — at 100 TB the per-type rank
       // sums are a managed table the trend test reads, not a day-blocked
-      // self-join it replays. Memo-cold mode re-pays this thunk, whose
-      // body is friedman's prefix verbatim.
-      val sums = graft.LabelsMemo.getOrCompute(s"friedman_sums:$d", s) {
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"),
-            date_trunc("day", col("ts")).cast("date").as("day"))
-          .agg(sum(cents(col("value"))).as("x"))
-          .transform(graft.CacheScope.persisted(_))
-        val k = daily.agg(countDistinct(col("event_type")).as("k"))
-        val complete = daily.groupBy("day").agg(count(lit(1)).as("c"))
-          .crossJoin(broadcast(k)).filter(col("c") === col("k"))
-          .select(col("day"))
-        val blocks = daily.join(complete, "day")
-          .transform(graft.CacheScope.persisted(_))
-        blocks.as("a")
-          .join(blocks.select(col("day").as("bd"), col("x").as("bx")).as("b"),
-            col("a.day") === col("bd"))
-          .groupBy(col("a.day").as("day"), col("a.event_type").as("event_type"))
-          .agg((lit(2) * sum(when(col("bx") < col("a.x"), 1L).otherwise(0L)) +
-            sum(when(col("bx") === col("a.x"), 1L).otherwise(0L)) + 1).as("r2"))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum(col("r2")).as("rj2"))
-      }
+      // self-join it replays. Memo-cold mode re-pays this thunk, which is
+      // friedman's own prefix.
+      val sums = graft.LabelsMemo.getOrCompute(s"friedman_sums:$d", s)(
+        friedmanRankSums(s, d)._2)
       val ord = sums.select(col("event_type").as("t1"))
         .join(broadcast(sums.select(col("event_type").as("t2"))),
           col("t2") <= col("t1"))

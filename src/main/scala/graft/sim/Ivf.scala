@@ -12,34 +12,17 @@ import graft.CacheScope.persisted
   * previous shape hardcoded K = label cardinality, one Lloyd step,
   * nprobe=2, and could not run on unlabeled embeddings).
   *
-  *   init:   k seed centroids picked DATA-DRIVEN and deterministically —
-  *           the k vectors with lexicographically smallest
-  *           md5(vec_id) (a reproducible pseudo-random draw, never
-  *           rand()); each seed's cell id is its own vec_id, so no
-  *           global row-number window is needed (the seed pick itself is
-  *           a TakeOrderedAndProject, not a global sort).
-  *   train:  `iters` full Lloyd steps — assign every vector to its
-  *           nearest centroid (argmin of the rank-equivalent expansion
-  *           -2·v·s/n + ss/n² of ||v - s/n||², ties by cell id), then
-  *           recompute centroids as the exact integer (sum, count) means
-  *           of the assigned cells. A cell that attracts no vectors
-  *           drops out (k shrinks) — deterministic, and mirrored exactly
-  *           by the oracle.
+  *   train:  `iters` steps of the shared [[Lloyd]] trainer from k
+  *           hash-picked seeds.
   *   assign: final argmin of every vector against the trained centroids.
   *   probe:  queries search their `nprobe` nearest cells; candidates are
   *           an equi-join on cell id; exact cosine re-rank; top-k.
   *
-  * Exact-integer arithmetic throughout (quantized int64 components; sums
-  * and dot products exact while n·d·(1000·|x|max)² < 2^53), so DuckDB
-  * reproduces every assignment bit-for-bit — the oracle SQL is generated
-  * from the SAME Params by [[oracleCtes]], unrolling the Lloyd loop into
-  * CTEs.
+  * The oracle SQL is generated from the SAME Params by [[oracleCtes]],
+  * unrolling the Lloyd loop into CTEs.
   *
-  * Scale: each Lloyd step is one shuffled scoring aggregation over the
-  * posexploded n×d relation and one fused (sum, count) centroid
-  * aggregation plus a broadcast of the K·d centroid table;
-  * candidates per query are ~nprobe/k of the collection; the cell id is
-  * the bucketing key at cluster scale. No collect, no global window.
+  * Scale: candidates per query are ~nprobe/k of the collection; the cell
+  * id is the bucketing key at cluster scale. No collect, no global window.
   */
 object Ivf {
 
@@ -65,12 +48,9 @@ object Ivf {
   def ann(emb0: DataFrame, p: Params): DataFrame = {
     import VecMath._
     val e = persisted(emb0.select(col("vec_id"), col("qe"), col("norm2")))
-    // the n×d relation feeding every centroid/assignment pass
-    val ex = persisted(e.select(col("vec_id"),
-      posexplode(col("qe")).as(Seq("i", "qx"))))
     // final assignment; one window serves both the collection cells
     // (rn=1) and the query probes (rn<=nprobe)
-    val r1 = probeRanked(e, ex, p)
+    val r1 = probeRanked(e, p)
     val cellAll = r1.filter(col("rn") === 1).select(col("vid"), col("cell"))
     val cellQ = r1.filter(col("vid") < p.nQueries)
       .select(col("vid").as("q_vid"), col("cell").as("q_cell"))
@@ -92,61 +72,15 @@ object Ivf {
   }
 
   /** Train the coarse quantizer and rank every vector's cells: returns the
-    * PERSISTED (vid, cell, rn) relation where rn orders cells by distance
-    * per vector — rn = 1 is the cell assignment, rn <= nprobe the query
-    * probes. Shared by [[ann]] and the composed [[IvfPq]] index, which
-    * needs the routing WITHOUT the exact re-rank. `e` = (vec_id, ...) and
-    * `ex` = its posexploded (vec_id, i, qx) components, both persisted by
-    * the caller.
+    * PERSISTED (vid, cell, rn, dd) relation where rn orders cells by
+    * distance per vector — rn = 1 is the cell assignment, rn <= nprobe the
+    * query probes. Shared by [[ann]], the composed [[IvfPq]] index (which
+    * needs the routing WITHOUT the exact re-rank) and the k-means readouts.
+    * `e` = (vec_id, qe, ...), persisted by the caller.
     */
-  def probeRanked(e: DataFrame, ex: DataFrame, p: Params): DataFrame = {
-
-    /** Rank-equivalent squared distance of every vector to every centroid.
-      * cent: (cell, i, s, n) — exact component sums with the cell size
-      * carried on every row, so ONE fused aggregation produced both and no
-      * separate count shuffle or size join is needed (`n` is constant
-      * within a cell; max() just picks it back out).
-      */
-    def distances(cent: DataFrame): DataFrame = {
-      val cm = cent.groupBy("cell")
-        .agg(sum(col("s") * col("s")).as("ss"), max(col("n")).as("n"))
-      val vs = ex.join(broadcast(cent.select("cell", "i", "s")), Seq("i"))
-        .groupBy(col("vec_id").as("vid"), col("cell"))
-        .agg(sum(col("qx") * col("s")).as("vs"))
-      vs.join(broadcast(cm), Seq("cell"))
-        .select(col("vid"), col("cell"),
-          ((lit(-2.0) * col("vs")) / col("n") +
-            col("ss").cast("double") / (col("n") * col("n"))).as("dd"))
-    }
-    def ranked(dist: DataFrame, r: Int): DataFrame = {
-      val w = Window.partitionBy("vid").orderBy(col("dd").asc, col("cell").asc)
-      dist.withColumn("rn", row_number().over(w)).filter(col("rn") <= r)
-    }
-
-    // init: deterministic hash-picked seeds; cell id = the seed's vec_id
-    val seeds = e.select(col("vec_id"), md5(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(p.k)
-      .select(col("vec_id"), col("vec_id").as("cell"))
-    var cent = ex.join(broadcast(seeds), Seq("vec_id"))
-      .select(col("cell"), col("i"), col("qx").as("s"), lit(1L).as("n"))
-    // Lloyd: assign, then exact integer means of the assigned cells —
-    // component sums AND cell sizes in the same shuffled aggregation
-    // (count(1) per (cell, i) IS the cell size: every assigned vector
-    // contributes exactly one row per component). `assign` stays
-    // persisted: distances() references its centroid input twice (the
-    // ss-aggregate and the vs-broadcast), so an unpersisted assignment
-    // would recompute the previous iteration's whole pipeline twice —
-    // 2^iters lineage blowup; the persist truncates it per iteration.
-    for (_ <- 1 to p.iters) {
-      val assign = persisted(ranked(distances(cent), 1)
-        .select(col("vid"), col("cell")))
-      cent = ex.join(assign, ex("vec_id") === assign("vid"))
-        .groupBy(col("cell"), col("i"))
-        .agg(sum("qx").as("s"), count(lit(1)).as("n"))
-    }
-    persisted(ranked(distances(cent), p.nprobe)
+  def probeRanked(e: DataFrame, p: Params): DataFrame =
+    persisted(Lloyd.ranked(Lloyd.train(e, p.k, p.iters), p.nprobe)
       .select(col("vid"), col("cell"), col("rn"), col("dd")))
-  }
 
   /** DuckDB oracle CTEs for the same Params, appended after an `e` CTE
     * (vec_id, i, qx) and a `norms` CTE (vec_id, norm2) — the Lloyd loop

@@ -67,7 +67,7 @@ object KnnGraphQueries extends QueryPack {
     // — the embedding-hygiene audit that tells you whether the label
     // column and the embedding space agree (mislabeled shards, drifted
     // encoders). One exploded-aggregate pass trains the per-label exact
-    // integer centroids; assignment is the Ivf distance formulation with
+    // integer centroids; assignment is the [[Lloyd]] distance with
     // cells = labels, so the broadcast/partial-agg scale shape and the
     // bit-for-bit double determinism are inherited verbatim.
     "sim_nearest_centroid" -> ((s, d) =>
@@ -160,10 +160,10 @@ object KnnGraphQueries extends QueryPack {
 
   /** Nearest-centroid confusion matrix over any (vec_id, label, embedding)
     * relation: exact integer per-label centroid sums (s, n), assignment by
-    * the rank-equivalent distance dd = (-2.0 * <q, s>) / n + ss/(n*n)
-    * (the [[Ivf]] formulation — component sums stay integers, so dd is
-    * the same IEEE expression in both engines), argmin by (dd, label)
-    * via one min(struct) aggregation, then (label, pred_label) counts.
+    * [[Lloyd.distances]] with cells = labels (component sums stay
+    * integers, so dd is the same IEEE expression in both engines), argmin
+    * by (dd, label) via one min(struct) aggregation, then
+    * (label, pred_label) counts.
     * Public for planted-separability specs.
     */
   def centroidConfusionOf(emb0: DataFrame): DataFrame = {
@@ -174,17 +174,7 @@ object KnnGraphQueries extends QueryPack {
     val cent = ex.groupBy(col("label").as("cell"), col("i"))
       .agg(sum(col("qx")).as("s"), count(lit(1)).as("n"))
       .transform(graft.CacheScope.persisted(_))
-    val cm = cent.groupBy("cell")
-      .agg(sum(col("s") * col("s")).as("ss"), max(col("n")).as("n"))
-    val vs = ex.join(broadcast(cent.select(col("cell"), col("i"), col("s"))),
-        Seq("i"))
-      .groupBy(col("vec_id"), col("label"), col("cell"))
-      .agg(sum(col("qx") * col("s")).as("vs"))
-    val dist = vs.join(broadcast(cm), Seq("cell"))
-      .select(col("vec_id"), col("label"), col("cell"),
-        ((lit(-2.0) * col("vs")) / col("n") +
-          col("ss").cast("double") / (col("n") * col("n"))).as("dd"))
-    dist.groupBy(col("vec_id"), col("label"))
+    Lloyd.distances(ex, cent).groupBy(col("vid"), col("label"))
       .agg(min(struct(col("dd"), col("cell"))).as("m"))
       .groupBy(col("label"), col("m.cell").as("pred_label"))
       .agg(count(lit(1)).as("n"))

@@ -16,8 +16,8 @@ import graft.CacheScope.persisted
   *           interleaved by `i mod M` — any fixed coordinate partition
   *           is a valid PQ split and this one needs no knowledge of the
   *           dimension); each subspace trains its own k-centroid
-  *           quantizer — the SAME deterministic hash-seeded exact-integer
-  *           Lloyd as IVF, all M subspaces in ONE relation keyed by
+  *           quantizer — the SAME [[Lloyd]] trainer as IVF with the
+  *           subspace key `m`, all M subspaces in ONE relation keyed by
   *           (m, cell), so training is one DAG, not M jobs.
   *   encode: every vector's code is its per-subspace argmin centroid —
   *           M small integers replace d floats (the compression: at
@@ -61,9 +61,7 @@ object Pq {
     */
   def adcTopK(emb0: DataFrame, p: Params): DataFrame = {
     val e = persisted(emb0.select(col("vec_id"), col("qe")))
-    val ex0 = persisted(e
-      .select(col("vec_id"), posexplode(col("qe")).as(Seq("i", "qx"))))
-    val (codes, qtab) = codesAndQtab(e, ex0, p)
+    val (codes, qtab) = codesAndQtab(e, p)
     val adc = codes
       .join(broadcast(qtab),
         col("m") === col("qm") && col("cell") === col("qcell") &&
@@ -83,13 +81,10 @@ object Pq {
     * each query's distance to EVERY (m, cell), i.e. its ADC lookup table.
     * Shared by [[adcTopK]] (full-collection ADC) and the composed
     * [[IvfPq]] index (ADC restricted to IVF-routed candidates). `e` =
-    * (vec_id, ...), `ex0` = its posexploded (vec_id, i, qx) components,
-    * both persisted by the caller; the m-keyed projection derives
-    * narrowly from `ex0`, so it is not pinned again.
+    * (vec_id, qe, ...), persisted by the caller.
     */
-  def codesAndQtab(
-      e: DataFrame, ex0: DataFrame, p: Params): (DataFrame, DataFrame) = {
-    val distF = persisted(subspaceDistF(e, ex0, p))
+  def codesAndQtab(e: DataFrame, p: Params): (DataFrame, DataFrame) = {
+    val distF = persisted(subspaceDistF(e, p))
     (argminCodes(distF), qtabOf(distF, p))
   }
 
@@ -98,12 +93,8 @@ object Pq {
     * [[IvfPq]] can route the trained distance relation through a
     * cross-query memo.
     */
-  private[sim] def argminCodes(dist: DataFrame): DataFrame = {
-    val w = Window.partitionBy("vid", "m")
-      .orderBy(col("dd").asc, col("cell").asc)
-    dist.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("vid"), col("m"), col("cell"))
-  }
+  private[sim] def argminCodes(dist: DataFrame): DataFrame =
+    Lloyd.ranked(dist, 1, "m").select(col("vid"), col("m"), col("cell"))
 
   /** The query-side ADC lookup table from the same trained distance
     * relation: each query's distance to EVERY (m, cell).
@@ -118,43 +109,8 @@ object Pq {
     * relation both ADC consumables ([[argminCodes]], [[qtabOf]]) derive
     * from narrowly, and therefore the unit [[IvfPq]] memoizes.
     */
-  private[sim] def subspaceDistF(
-      e: DataFrame, ex0: DataFrame, p: Params): DataFrame = {
-    val ex = ex0.withColumn("m", pmod(col("i"), lit(p.m)))
-
-    /** Per-subspace rank-equivalent squared distance of every vector to
-      * every (m, cell) centroid — [[Ivf]]'s expansion with the subspace
-      * key carried through.
-      */
-    def distances(cent: DataFrame): DataFrame = {
-      val cm = cent.groupBy("m", "cell")
-        .agg(sum(col("s") * col("s")).as("ss"), max(col("n")).as("n"))
-      val vs = ex
-        .join(broadcast(cent.select("m", "i", "s", "cell")), Seq("m", "i"))
-        .groupBy(col("vec_id").as("vid"), col("m"), col("cell"))
-        .agg(sum(col("qx") * col("s")).as("vs"))
-      vs.join(broadcast(cm), Seq("m", "cell"))
-        .select(col("vid"), col("m"), col("cell"),
-          ((lit(-2.0) * col("vs")) / col("n") +
-            col("ss").cast("double") / (col("n") * col("n"))).as("dd"))
-    }
-    // One hash-picked seed set feeds all M subspaces (each seed's m-th
-    // subvector seeds subspace m; cell id = seed vec_id).
-    val seeds = e.select(col("vec_id"), md5(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(p.k)
-      .select(col("vec_id"), col("vec_id").as("cell"))
-    var cent = ex.join(broadcast(seeds), Seq("vec_id"))
-      .select(col("m"), col("cell"), col("i"), col("qx").as("s"), lit(1L).as("n"))
-    for (_ <- 1 to p.iters) {
-      val assign = persisted(argminCodes(distances(cent))
-        .select(col("vid"), col("m").as("am"), col("cell")))
-      cent = ex
-        .join(assign, ex("vec_id") === assign("vid") && ex("m") === assign("am"))
-        .groupBy(ex("m"), col("cell"), col("i"))
-        .agg(sum("qx").as("s"), count(lit(1)).as("n"))
-    }
-    distances(cent)
-  }
+  private[sim] def subspaceDistF(e: DataFrame, p: Params): DataFrame =
+    Lloyd.train(e, p.k, p.iters, "m" -> pmod(col("i"), lit(p.m)))
 
   /** DuckDB oracle CTEs for the same Params, appended after the shared
     * `e` CTE. DuckDB's generate_subscripts is 1-based where posexplode is

@@ -322,7 +322,7 @@ object SimilarityQueries extends QueryPack {
     "sim_dbscan" -> ((s, d) => Dbscan.cluster(emb(s, d), Dbscan.Default)),
 
     // Standalone k-means readout of the SAME hash-seeded exact-integer
-    // Lloyd trainer IVF routes with ([[Ivf.probeRanked]]): per-cluster
+    // Lloyd trainer IVF routes with ([[Lloyd]]): per-cluster
     // size, inertia, and mean squared distance — the clustering-quality
     // gauge (elbow readout) a corpus-partitioning or IVF-dial decision
     // reads. Per-vector squared distances are norm2 + dd/1e6 (exact
@@ -522,13 +522,9 @@ object SimilarityQueries extends QueryPack {
     * re-pays this thunk per repetition.
     */
   private def ivfRanked(s: SparkSession, d: String): DataFrame =
-    graft.LabelsMemo.getOrCompute(s"ivf_ranked:$d", s) {
-      val e0 = CacheScope.persisted(
-        emb(s, d).select(col("vec_id"), col("qe"), col("norm2")))
-      val ex = CacheScope.persisted(e0.select(col("vec_id"),
-        posexplode(col("qe")).as(Seq("i", "qx"))))
-      Ivf.probeRanked(e0, ex, IvfParams)
-    }
+    graft.LabelsMemo.getOrCompute(s"ivf_ranked:$d", s)(Ivf.probeRanked(
+      CacheScope.persisted(emb(s, d).select(col("vec_id"), col("qe"), col("norm2"))),
+      IvfParams))
 
   /** PQ dials: 8 subspaces x 16 centroids over the 64-dim embeddings
     * (8 dims per sub-quantizer, a 32-bit code), one Lloyd step per
@@ -538,8 +534,8 @@ object SimilarityQueries extends QueryPack {
     m = 8, k = 16, iters = 1, topK = 3, nQueries = NQueries)
 
   /** Shared oracle CTEs: integer-quantized elements + norms (exact sums).
-    * `private[graft]`: dedup.DedupQueries' semdedup oracle composes the
-    * same quantized-element relation with Ivf.oracleCtes.
+    * `private[graft]`: dedup.SemanticDedupQueries' semdedup oracles compose
+    * the same quantized-element relation with Ivf.oracleCtes.
     */
   private[graft] val eCte: String =
     """WITH e AS (

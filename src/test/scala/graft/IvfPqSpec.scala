@@ -108,4 +108,32 @@ class IvfPqSpec extends SparkSpec {
       assert(got(0).getDouble(2) === 1.0)
     } finally CacheScope.releaseAll()
   }
+
+  test("warm memos: no trainer runs, so the posexploded input is never pinned") {
+    try {
+      val p = params(nprobe = 2)
+      // The composition's own `e` and the posexploded relation the
+      // trainers pin; a lookup by plan tells whether a pin exists.
+      def exploded = emb.select(col("vec_id"), col("qe"), col("norm2"))
+        .select(col("vec_id"), posexplode(col("qe")).as(Seq("i", "qx")))
+      val none = org.apache.spark.storage.StorageLevel.NONE
+      val trained = scala.collection.mutable.Map.empty[String, DataFrame]
+      IvfPq.ann(emb, p, (key, f) => {
+        val df = f()
+        val local = spark.createDataFrame(
+          java.util.Arrays.asList(df.collect(): _*), df.schema)
+        trained(key) = local
+        local
+      }).collect()
+      assert(trained.size === 2)
+      assert(exploded.storageLevel !== none, "a cold call trains, so pins")
+      CacheScope.releaseAll()
+      val before = CacheScope.activeCount
+      val warm = IvfPq.ann(emb, p, (key, _) => trained(key)).collect()
+      // `e` and the re-pinned PQ distance table; nothing for the trainers
+      assert(CacheScope.activeCount - before === 2)
+      assert(exploded.storageLevel === none)
+      assert(warm.nonEmpty)
+    } finally CacheScope.releaseAll()
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sim.{Pq, VecMath}
+import graft.sim.{Ivf, Pq, VecMath}
 
 /** The PQ-ADC operator: deterministic, bounded, and a planted duplicate
   * must surface at the minimum ADC distance (a duplicate shares the
@@ -60,6 +60,26 @@ class PqSpec extends SparkSpec {
         s"planted duplicate (vec 50) must be in the top-3, got ${got.toList}")
       assert(dupRow.get._2 == minAdc,
         s"duplicate must sit at the minimum ADC distance, got ${got.toList}")
+    } finally CacheScope.releaseAll()
+  }
+
+  test("m = 1: the PQ codes are IVF's rn = 1 cells for the same k and iters") {
+    try {
+      val e = Tables.load(spark, sfDir, "embeddings")
+        .select(col("vec_id"), VecMath.quantize(col("embedding")).as("qe"))
+        .transform(CacheScope.persisted(_))
+      val pqCodes = Pq.codesAndQtab(e,
+        Pq.Params(m = 1, k = 8, iters = 2, topK = 3, nQueries = 10))._1
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+      val ivfCells = Ivf.probeRanked(e,
+        Ivf.Params(k = 8, iters = 2, nprobe = 1, topK = 3, nQueries = 10))
+        .filter(col("rn") === 1).select(col("vid"), col("cell"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(ivfCells.nonEmpty)
+      assert(ivfCells.map(_._2).distinct.length > 1, "one cell proves nothing")
+      assert(pqCodes.forall(_._2 == 0), "m = 1 has the single subspace 0")
+      assert(pqCodes.map(c => (c._1, c._3)).toSet === ivfCells.toSet)
+      assert(pqCodes.length === ivfCells.length)
     } finally CacheScope.releaseAll()
   }
 }
