@@ -131,8 +131,8 @@ object SemanticDedupQueries extends QueryPack {
     * a managed table the audit reads, not a training job it repeats).
     */
   def semdedupCells(emb0: DataFrame): DataFrame =
-    persisted(Lloyd.ranked(Lloyd.train(quantized(emb0), SemK, SemIters), 1)
-      .select(col("vid"), col("cell")))
+    Lloyd.ranked(Lloyd.train(quantized(emb0), SemK, SemIters), 1)
+      .select(col("vid"), col("cell"))
 
   /** (vec_id, qe, norm2), pinned: the quantized relation the quantizer
     * trains on and the cosine scans read.

@@ -19,7 +19,7 @@ import graft.QueryPack
   * composes (e.g. truss edges ⊂ kcore edges ⊂ edges).
   *
   * Scale shapes: Louvain-move is two equi-joins + one min(struct)
-  * aggregation (the lpaOf argmax discipline — no window); the double
+  * aggregation (an argmax in one aggregation — no window); the double
   * sweep is 2×[[GraphPathQueries.BfsRounds]] [[Kernels.minPlus]] rounds
   * with the peripheral-node handoff staying IN-PLAN (a 1-row TakeOrdered
   * relation, never a driver collect); the truss peel re-runs

@@ -3,13 +3,17 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** Opt-in precondition checks for the graph fixpoints whose r13 cold-path
-  * cut made symmetry LOAD-BEARING (ADVICE r14): [[GraphPathQueries.katzOf]]
-  * and [[GraphQueries.lpaOf]] dropped the per-round "left join nodes +
-  * coalesce" re-attach, so on a non-symmetric edge relation a
-  * zero-in-degree node silently vanishes from the output — wrong results
-  * with no signal. The check makes a future non-symmetric caller fail
-  * loudly instead.
+/** Opt-in precondition checks for the operators that iterate
+  * [[Kernels.round]] over an edge relation they take to be symmetric:
+  * PageRank, PPR and TextRank (through [[Kernels.rank]]),
+  * [[GraphPathQueries.katzOf]] and [[GraphQueries.lpaOf]]. A message
+  * round sends along each node's IN-edges from the second round on, so
+  * it equals the join formulation only when every (src, dst, w) has a
+  * (dst, src, w) twin, duplicates included. On any other relation a node
+  * with no in-edge silently vanishes and weights flow the wrong way —
+  * wrong results with no signal. The check makes such a caller fail
+  * loudly instead. HITS alternates the two sides of a bipartite relation
+  * and is not checked.
   *
   * Debug-mode, not production-path: the verification is a corpus-sized
   * set-difference job, which does not belong in front of every fixpoint
@@ -35,15 +39,18 @@ object EdgeChecks {
     try body finally on.set(prev)
   }
 
-  /** Fail loudly unless every (src, dst) has its (dst, src) twin. limit(1)
-    * stops the verification scan at the first counterexample.
+  /** Fail loudly unless every (src, dst) row — with its `w`, when the
+    * relation has one — has its own (dst, src) twin: a multiset
+    * difference, so an unpaired duplicate fails too. limit(1) stops the
+    * verification scan at the first counterexample.
     */
   def requireSymmetric(edges: DataFrame, op: String): Unit = if (enabled) {
-    val missing = edges.select(col("src"), col("dst"))
-      .except(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val w = if (edges.columns.contains("w")) Seq(col("w")) else Nil
+    val missing = edges.select(col("src") +: col("dst") +: w: _*)
+      .exceptAll(edges.select(col("dst").as("src") +: col("src").as("dst") +: w: _*))
       .limit(1).count()
     require(missing == 0L,
-      s"$op: edge relation is not symmetric — the fixpoint would silently " +
-        "drop zero-in-degree nodes (precondition, ADVICE r13/r14)")
+      s"$op: edge relation is not symmetric — a message round would " +
+        "silently drop zero-in-degree nodes and misroute weights")
   }
 }

@@ -77,7 +77,7 @@ object GraphPathQueries extends QueryPack {
     // amplify): x ← 1 + α·Aᵀx truncated at [[KatzIters]] terms, in the
     // same integer fixed-point grains as pagerankOf so the result is
     // bit-reproducible under any partitioning. Each round is one
-    // equi-join + sum-agg over the persisted edge relation; α = 5% keeps
+    // message round (one shuffle, no join); α = 5% keeps
     // the truncated series (and the int64 headroom) comfortably bounded
     // at any degree the co-purchase graph produces.
     "q_graph_katz" -> ((s, d) => katzOf(windowedEdges(s, d)))
@@ -92,38 +92,22 @@ object GraphPathQueries extends QueryPack {
   /** Truncation depth of the Katz series (a dial the oracle unrolls). */
   val KatzIters = 5
 
-  /** The truncated-Katz fixpoint over a symmetric (src, dst) edge
-    * relation. Exact integer arithmetic end to end.
-    *
-    * PRECONDITION (ADVICE r13): every node must receive at least one
-    * in-edge each round — symmetric relations satisfy this for free. The
-    * r13 cold-path cut dropped the per-round "left join nodes +
-    * coalesce" re-attach, so on a non-symmetric input a zero-in-degree
-    * node VANISHES from the output instead of keeping its base score
-    * (every registered caller passes the symmetric windowed co-purchase
-    * relation, where the contract holds by construction; a debug-mode
-    * [[EdgeChecks.requireSymmetric]] makes a future non-symmetric caller
-    * fail loudly — EdgeSymmetrySpec runs the registered callers under it).
+  /** The truncated-Katz fixpoint over a (src, dst) edge relation,
+    * symmetric as a multiset. Exact integer arithmetic end to end: each
+    * round is one [[Kernels.round]] in which every node sends its score
+    * to its neighbours and sets x = Scale + (α · Σ received) div 100.
+    * Symmetry is what makes the round exact (see [[Kernels.round]]); a
+    * node with no in-edge drops out, so a debug-mode
+    * [[EdgeChecks.requireSymmetric]] makes a non-symmetric caller fail
+    * loudly (EdgeSymmetrySpec runs the registered callers under it).
     */
   def katzOf(edgesDf: DataFrame): DataFrame = {
     EdgeChecks.requireSymmetric(edgesDf, "katzOf")
-    // r13 cold-path cut (the pagerankOf discipline): the graph is
-    // symmetric, so every node receives at least one neighbor
-    // contribution each round and the old per-round "left join nodes +
-    // coalesce(contrib, 0)" re-attach was the identity — one equi-join +
-    // one aggregation per round, no nodes pin, bit-identical output.
-    val e = graft.CacheScope.persisted(edgesDf)
-    var x = e.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(KatzScale).as("x"))
-    for (_ <- 1 to KatzIters) {
-      x = e.join(x, col("src") === col("node"))
-        .select(col("dst"), col("x"))
-        .groupBy("dst")
-        .agg((lit(KatzScale) +
-          expr(s"($KatzAlphaPct * sum(x)) div 100")).as("x"))
-        .select(col("dst").as("node"), col("x"))
-    }
-    x.select(col("node"), col("x").as("katz_fixed"))
+    var x = Kernels.adjacency(Kernels.unitWeights(edgesDf))
+      .withColumn("v", lit(KatzScale))
+    for (_ <- 1 to KatzIters)
+      x = Kernels.round(x, expr(s"${KatzScale}L + ($KatzAlphaPct * sum(v)) div 100"))
+    x.select(col("n").as("node"), col("v").as("katz_fixed"))
   }
 
   /** BFS relaxation rounds — nodes beyond this hop count are (honestly)

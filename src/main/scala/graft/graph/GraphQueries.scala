@@ -62,8 +62,7 @@ object GraphQueries extends QueryPack {
   private[graph] def edges(s: SparkSession, d: String): DataFrame =
     graft.LabelsMemo.getOrCompute(s"copurchase-edges:$d", s)(edgesRaw(s, d))
 
-  /** The fixpoint itself, over any (src, dst) edge relation in which every
-    * node appears as a src (symmetric graphs satisfy this for free).
+  /** The fixpoint itself, over any symmetric (src, dst) edge relation.
     * GraphSpec drives it over planted graphs: mass conservation up to
     * integer-truncation loss, structural symmetry, and bit-identical
     * results under repartitioning.
@@ -76,7 +75,7 @@ object GraphQueries extends QueryPack {
     * (parts with pk % [[PprSeedMod]] == 0 — a dial) instead of uniformly,
     * so rank concentrates in the seeds' neighborhoods — the
     * related-products / local-relevance primitive. Same integer
-    * fixed-point, joins, and overflow bounds as [[pagerankOf]]; the only
+    * fixed-point rounds and overflow bounds as [[pagerankOf]]; the only
     * change is the restart term: (1-d)·Scale lands on seeds only, and the
     * init places all mass on seeds. Nodes unreachable from any seed
     * finish at exactly 0 and are filtered — at 100 TB the output is the
@@ -163,8 +162,8 @@ object GraphQueries extends QueryPack {
     // LabelsMemo, two label equi-joins, |communities|-bounded aggregates,
     // exact integers until the single φ division.
     "q_graph_conductance" -> ((s, d) => {
-      val e = windowedEdges(s, d).transform(graft.CacheScope.persisted(_))
-      val lab = graft.LabelsMemo.getOrCompute(s"lpa-labels:$d", s)(lpaOf(e))
+      val e = windowedEdges(s, d)
+      val lab = lpaLabels(s, d)
       val m2 = e.agg(count(lit(1)).as("m2"))
       val cut = e
         .join(lab.select(col("node").as("src"), col("community").as("c1")), "src")
@@ -186,13 +185,13 @@ object GraphQueries extends QueryPack {
     }),
 
     "q_graph_modularity" -> ((s, d) => {
-      val e = windowedEdges(s, d).transform(graft.CacheScope.persisted(_))
+      val e = windowedEdges(s, d)
       // The partition under scoring IS q_graph_lpa's output; LabelsMemo
       // materializes the fixpoint once per (data dir) and later callers
       // do a plain parquet read — the dedup_clusters consumer discipline
       // (q_graph_lpa itself does NOT read through the memo, so its
       // benched cost stays the honest full-fixpoint cost).
-      val lab = graft.LabelsMemo.getOrCompute(s"lpa-labels:$d", s)(lpaOf(e))
+      val lab = lpaLabels(s, d)
       val m2 = e.agg(count(lit(1)).as("m2"))
       val ein = e
         .join(lab.select(col("node").as("src"), col("community").as("c1")), "src")
@@ -279,29 +278,16 @@ object GraphQueries extends QueryPack {
     * happens ONCE at the end per side: scores scale to a total side mass
     * of [[HitsTot]] by integral division with the side total.
     *
-    * Message round: the state carries its own adjacency, so no half-step
-    * joins the edges back in. Hub state is (c, h, ps), with ps every part
-    * c bought (one groupBy over the edges). A half-step explodes ps into
-    * messages (p, c, h) and runs ONE aggregation, grouping by p into
-    * (p, a = sum(h), cs = collect_list(c)). The senders that reach p are
-    * exactly p's neighbours, so (p, a, cs) is the authority state and
+    * Each half-step is one [[Kernels.round]] with unit weights: hub state
+    * (n = c, adj = every part c bought, v = h) sends h to each part, and
+    * the parts' sum with their list of senders is the authority state;
     * the next half-step runs the same way back. collect_list keeps
     * duplicate edges, so they count with multiplicity as in the join
-    * formulation the oracle unrolls. Each half-step is one shuffle with
-    * no join and no broadcast job.
-    *
-    * Why no pin: nothing is read twice until the end, so the whole query
-    * is one lazy plan with a single action and the builder runs no job.
-    * The final per-side `crossJoin(broadcast(total))` reads its side's
-    * lineage twice; both reads plan to the same exchanges, which Spark's
-    * exchange reuse computes once.
-    *
-    * Hub-array bound: one state row holds a node's whole neighbour list,
-    * so the largest degree must fit in one row (a task's memory, and
-    * under 2^31 - 15 elements). A month of customer-part purchases is
-    * far below that; a power-law graph at scale would need its hubs
-    * split first. Messages carry their sender id, which makes each
-    * shuffle a few bytes a message larger than the join form's.
+    * formulation the oracle unrolls. The whole query is one lazy plan
+    * with a single action; the final per-side
+    * `crossJoin(broadcast(total))` reads its side's lineage twice, and
+    * both reads plan to the same exchanges, which Spark's exchange reuse
+    * computes once.
     *
     * Overflow headroom: raw scores are bounded by edges^(rounds) *
     * maxdeg^(rounds-1); DECIMAL(38,0) minus the 10^15 renormalization
@@ -310,17 +296,13 @@ object GraphQueries extends QueryPack {
     * (side 'hub'|'auth', node, score). Public for planted-graph specs.
     */
   def hitsOf(edgesDf: DataFrame): DataFrame = {
-    // Either side's state is (n node, v score, adj neighbours).
-    def step(state: DataFrame) =
-      state.select(explode(col("adj")).as("to"), col("n").as("from"), col("v"))
-        .groupBy(col("to").as("n"))
-        .agg(sum(col("v")).as("v"), collect_list(col("from")).as("adj"))
-    var h = edgesDf.groupBy(col("c").as("n")).agg(collect_list(col("p")).as("adj"))
-      .select(col("n"), expr("CAST(1 AS DECIMAL(38,0))").as("v"), col("adj"))
+    var h = Kernels.adjacency(Kernels.unitWeights(
+        edgesDf.select(col("c").as("src"), col("p").as("dst"))))
+      .withColumn("v", expr("CAST(1 AS DECIMAL(38,0))"))
     var a: DataFrame = null
     for (_ <- 1 to HitsRounds) {
-      a = step(h)
-      h = step(a)
+      a = Kernels.round(h, sum(col("v")))
+      h = Kernels.round(a, sum(col("v")))
     }
     def norm(df: DataFrame, side: String) =
       df.crossJoin(broadcast(df.agg(sum(col("v")).as("tot"))))
@@ -463,42 +445,30 @@ object GraphQueries extends QueryPack {
     */
   val LpaRounds = 3
 
-  /** Fixed-round synchronous label propagation over a SYMMETRIC
-    * (src, dst) edge relation — the precondition is load-bearing (ADVICE
-    * r13): the r13 cold-path cut dropped the per-round "left join nodes
-    * + coalesce(lbl, node)" re-attach, so a node with no in-edges would
-    * silently vanish instead of keeping its own label; in a symmetric
-    * relation every node is some edge's dst and the argmax covers all of
-    * them (every registered caller passes symmetric relations; a
-    * debug-mode [[EdgeChecks.requireSymmetric]] makes a future
-    * non-symmetric caller fail loudly — see EdgeSymmetrySpec).
-    *
-    * Labels start as the node id; each round
-    * every node adopts the argmax neighbor label by (count desc, label
-    * asc). The argmax is max(struct(n, -lbl)) — one aggregation, no
-    * window — and each round is the same equi-join + aggregate shuffle
-    * shape as a PageRank iteration, so the 100 TB notes there carry over
-    * verbatim (pinned edge relation, linear lineage, checkpoint every few
-    * rounds at cluster scale).
+  /** Fixed-round synchronous label propagation over a (src, dst) edge
+    * relation, symmetric as a multiset. Labels start as the node id; each
+    * round is one [[Kernels.round]] in which every node sends its label
+    * to its neighbours and adopts `mode(v, deterministic = true)` of what
+    * it receives: the most frequent label, ties to the lowest, which is
+    * the oracle's (count desc, label asc) argmax in one aggregation.
+    * Symmetry is what makes the round exact (see [[Kernels.round]]); a
+    * node with no in-edge drops out, so a debug-mode
+    * [[EdgeChecks.requireSymmetric]] makes a non-symmetric caller fail
+    * loudly (EdgeSymmetrySpec runs the registered callers under it).
     */
   def lpaOf(edgesDf: DataFrame, rounds: Int = LpaRounds): DataFrame = {
     EdgeChecks.requireSymmetric(edgesDf, "lpaOf")
-    // r13 cold-path cut: in a symmetric edge relation every node is some
-    // edge's src, so the per-round argmax covers EVERY node and the old
-    // "left join nodes + coalesce(lbl, node)" re-attach was the identity
-    // — each round is now one equi-join + two aggregations, one join and
-    // one pinned relation fewer (bit-identical output, same hash).
-    val e = graft.CacheScope.persisted(edgesDf)
-    var lab = e.select(col("src").as("node"), col("src").as("lbl")).distinct()
-    for (_ <- 1 to rounds) {
-      val cnt = e.join(lab, col("dst") === col("node"))
-        .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("n"))
-      lab = cnt.groupBy(col("src"))
-        .agg(max(struct(col("n"), (-col("lbl")).as("nl"))).as("b"))
-        .select(col("src").as("node"), (-col("b.nl")).as("lbl"))
-    }
-    lab.select(col("node"), col("lbl").as("community"))
+    var lab = Kernels.adjacency(Kernels.unitWeights(edgesDf))
+      .withColumn("v", col("n"))
+    for (_ <- 1 to rounds) lab = Kernels.round(lab, mode(col("v"), true))
+    lab.select(col("n").as("node"), col("v").as("community"))
   }
+
+  /** q_graph_lpa's partition of the windowed edges through LabelsMemo:
+    * the one producer stored under the `lpa-labels` name.
+    */
+  private def lpaLabels(s: SparkSession, d: String): DataFrame =
+    graft.LabelsMemo.getOrCompute(s"lpa-labels:$d", s)(lpaOf(windowedEdges(s, d)))
 
   private[graph] val edgesCte: String =
     """WITH li AS (

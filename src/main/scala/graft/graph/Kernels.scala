@@ -5,21 +5,65 @@ import org.apache.spark.sql.functions._
 
 import graft.CacheScope.persisted
 
-/** The three round shapes of the graph and TextRank operators, each
-  * written once. Every round is one equi-join plus one aggregation, so an
-  * operator costs its round count times the shuffles below; each kernel
-  * pins the same relations for every caller.
+/** The round shapes of the graph and TextRank operators, each written
+  * once: the message round every fixed-round operator iterates, the
+  * min-plus relaxation and the triangle apexes.
   */
 private[graft] object Kernels {
 
+  /** The adjacency state (n, adj) of a weighted (src, dst, w) relation:
+    * each src with its out-edges as adj = array<struct<to, w>>.
+    * Duplicate edges stay as repeated entries.
+    */
+  def adjacency(edgesW: DataFrame): DataFrame =
+    edgesW.groupBy(col("src").as("n"))
+      .agg(collect_list(struct(col("dst").as("to"), col("w"))).as("adj"))
+
+  /** One message round over a node state (n, adj, v…): every adjacency
+    * entry (to, w) sends its sender's row, with the entry's `w`, to `to`,
+    * and ONE aggregation per receiver folds those messages into `agg`, an
+    * aggregate over the sender's columns and `w`. Returns (n, adj, v =
+    * agg), where the receiver's next adj is the list of its senders with
+    * the same w.
+    *
+    * Shape: each round is one explode and one shuffle, with no join and
+    * no pin, because the state carries its own adjacency; PageRank, PPR,
+    * TextRank, HITS, Katz and LPA all iterate this one round, so a query
+    * over any of them is one lazy plan whose builder runs no job. Nothing
+    * is read twice inside the loop, so a pin would buy nothing and would
+    * cost one eager job per round.
+    *
+    * Exactness: the senders that reach a node are exactly its in-edges,
+    * with multiplicity. That equals its out-edges — so round i + 1 sends
+    * along the same edges as round 1 — for a bipartite relation whose
+    * rounds alternate sides (HITS), and for a relation that is symmetric
+    * as a multiset of (src, dst, w) (the other five; see
+    * [[EdgeChecks.requireSymmetric]]). A node with no in-edge has no
+    * row after the first round.
+    *
+    * Hub-array bound: one state row holds a node's whole neighbour list,
+    * so the largest degree must fit in one row (a task's memory, and
+    * under 2^31 - 15 elements). The co-purchase graphs, a month of
+    * purchases and a corpus's word graph are far below that; a power-law
+    * graph at scale would need its hubs split first. Messages carry their
+    * sender id and weight, a few bytes more per shuffled row than a join
+    * form's.
+    */
+  def round(state: DataFrame, agg: Column): DataFrame =
+    state.select(col("*"), inline(col("adj")))
+      // `n` inside agg resolves to the exploded rows' n (the sender), not
+      // to the grouping alias
+      .groupBy(col("to").as("n"))
+      .agg(collect_list(struct(col("n").as("to"), col("w"))).as("adj"), agg.as("v"))
+
   /** Integer fixed-point rank iteration over a weighted (src, dst, w)
-    * relation in which every node appears as a src: [[GraphQueries.Iters]]
+    * relation, symmetric as a multiset: [[GraphQueries.Iters]] message
     * rounds of r'(v) = restart(v) + 85% · Σ_u w(u,v) · (r(u) div W(u)),
-    * W(u) the node's total edge weight (its outdegree when every w = 1).
+    * W(u) the node's total edge weight (its degree when every w = 1). The
+    * sender computes r(u) div W(u) once and each entry scales it by its w.
     * Seed nodes (`seed`, a predicate over `src`) start with Scale and
     * receive the (1-d)·Scale restart; the rest start and restart at 0.
-    * Returns (node, r) for every node. Pins the edges, the weighted
-    * degrees and the degree-attached edges.
+    * Returns (node, r) for every node.
     *
     * Determinism (the whole point of the formulation): ranks are
     * FIXED-POINT int64 micro-units ([[GraphQueries.Scale]] = 10^12 per
@@ -35,22 +79,6 @@ private[graft] object Kernels {
     * worst case needs a near-total-mass hub, so typical graphs go far
     * beyond N=1.1e5, and the failure mode is loud either way: Spark 4 runs
     * ANSI mode by default, so int64 overflow THROWS instead of wrapping.
-    *
-    * Scale design: each round is one join edges->ranks (equi on src) +
-    * one dst aggregation — the shuffle shape GraphX/Pregel lowers to. The
-    * rounds build one linear lineage (each rank relation feeds exactly the
-    * next round, so nothing recomputes); the pinned edge relations feed
-    * every round. At a 100 TB edge relation you would checkpoint ranks
-    * every few rounds exactly as [[graft.Fixpoint]]'s operators do. The
-    * per-round "left join nodes + coalesce" re-attach is deliberate plan
-    * shaping, not redundancy: `nodes` projects the PINNED, size-known deg
-    * relation, so every round's rank side carries a node-count estimate
-    * and Catalyst broadcasts it under the edge join while it fits (an r13
-    * A/B probe of the fold-into-one-agg variant measured 5.5 s vs 2.0 s
-    * steady-state — the agg-chained rank side loses the size estimate and
-    * every round degrades to a 1.2M-row shuffle join; at cluster scale
-    * both shapes degrade gracefully to the same node-keyed shuffle join
-    * once ranks outgrow the threshold).
     *
     * FRONTIER PRUNE — tried and REJECTED for personalized PageRank
     * (VERDICT r13 #2, r14 A/B probe): filtering r > 0 per round so early
@@ -69,23 +97,20 @@ private[graft] object Kernels {
     */
   def rank(edgesW: DataFrame, seed: Column): DataFrame = {
     import GraphQueries.{DampPct, Iters, Scale}
-    val e = persisted(edgesW)
-    val deg = persisted(e.groupBy("src").agg(sum(col("w")).as("wdeg")))
-    val ed = persisted(e.join(deg, "src")
-      .select(col("src"), col("dst"), col("w"), col("wdeg")))
-    val nodes = deg.select(col("src").as("node"), seed.as("seed"))
-    def seeded(v: Long) = when(col("seed"), lit(v)).otherwise(lit(0L))
-    var r = nodes.select(col("node"), seeded(Scale).as("r"))
+    EdgeChecks.requireSymmetric(edgesW, "Kernels.rank")
+    // `seed` reads `src`, so the node is named src while v is set
+    def restart(state: DataFrame, base: Long, v: Column) =
+      state.withColumnRenamed("n", "src")
+        .select(col("src").as("n"), col("adj"),
+          (when(seed, lit(base)).otherwise(lit(0L)) + v).as("v"))
+    var r = restart(adjacency(edgesW), Scale, lit(0L))
     for (_ <- 1 to Iters) {
-      val contrib = ed.join(r, col("src") === col("node"))
-        .select(col("dst"), (col("w") * expr("r div wdeg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      r = nodes
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"), (seeded((100L - DampPct) * Scale / 100L) +
-          expr(s"($DampPct * coalesce(contrib, 0L)) div 100")).as("r"))
+      val sent = r.select(col("n"), col("adj"),
+        expr("v div aggregate(adj.w, 0L, (a, x) -> a + x)").as("v"))
+      r = restart(round(sent, sum(col("w") * col("v"))),
+        (100L - DampPct) * Scale / 100L, expr(s"($DampPct * v) div 100"))
     }
-    r
+    r.select(col("n").as("node"), col("v").as("r"))
   }
 
   /** `rounds` bounded min-plus relaxations over a weighted (src, dst, w)
@@ -96,8 +121,8 @@ private[graft] object Kernels {
     * (keys..., node, `dist`) for every node reached within `rounds` edges.
     * Pins the self-looped edges only.
     *
-    * Each round is ONE equi-join + min-aggregation — the PageRank shuffle
-    * shape — because the edge relation carries ZERO-WEIGHT SELF-LOOPS:
+    * Each round is ONE equi-join + min-aggregation because the edge
+    * relation carries ZERO-WEIGHT SELF-LOOPS:
     * the min folds "keep my own distance" (self-loop, w=0) and "relax via
     * a neighbor" (real edge) into a single consumption of the previous
     * round's relation. The naive min(d(v), relax) form reads d TWICE per

@@ -78,14 +78,16 @@ object IvfPq {
     * them through [[graft.LabelsMemo]] is invisible to the hash gate; the
     * honest-producer discipline holds because `sim_ann_ivf` and
     * `sim_pq_adc` train the same structures WITHOUT the memo, keeping
-    * their benched numbers the full training cost. Default = identity
-    * (train inline), which is what specs and standalone callers get. The
+    * their benched numbers the full training cost. Default = train
+    * inline and pin (specs and standalone callers): the PQ table has two
+    * readers, and the probe ranking is pinned by its trainer already. A
+    * memo hands back a materialized read, which is not pinned again. The
     * trainers pin their posexploded input themselves, so when both
     * memoized relations are warm no trainer runs and nothing beyond `e` is
     * pinned.
     */
   def ann(emb0: DataFrame, p: Params,
-      memo: (String, () => DataFrame) => DataFrame = (_, f) => f()): DataFrame = {
+      memo: (String, () => DataFrame) => DataFrame = (_, f) => persisted(f())): DataFrame = {
     import VecMath._
     val e = persisted(emb0.select(col("vec_id"), col("qe"), col("norm2")))
 
@@ -103,9 +105,8 @@ object IvfPq {
     // rank: ADC over routed candidates only — fan candidates out M ways
     // via their codes, look each (m, cell) up in the query's table, and
     // collapse in partial aggregation
-    val distF = persisted(
-      memo(s"ivfpq-pqdist-m${p.pq.m}-k${p.pq.k}-i${p.pq.iters}",
-        () => Pq.subspaceDistF(e, p.pq)))
+    val distF = memo(s"ivfpq-pqdist-m${p.pq.m}-k${p.pq.k}-i${p.pq.iters}",
+      () => Pq.subspaceDistF(e, p.pq))
     val codes = Pq.argminCodes(distF)
     val qtab = Pq.qtabOf(distF, p.pq)
     val adc = cand

@@ -14,11 +14,10 @@ import graft.{QueryPack, Tables}
   */
 object BpeQueries extends QueryPack {
 
+  import TextAnalysisQueries.cleanTokens
+
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables.load(s, d, "documents")
-
-  private def cleanTokens(c: Column): Column =
-    TextAnalysisQueries.cleanTokens(c)
 
   /** BPE training config: vocab cap (total-ordered top-K words) and merge
     * rounds. Small enough that the unrolled oracle CTE chain stays

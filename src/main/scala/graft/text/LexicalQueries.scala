@@ -29,6 +29,8 @@ import graft.{QueryPack, Tables}
   */
 object LexicalQueries extends QueryPack {
 
+  import TextAnalysisQueries.cleanTokens
+
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables.load(s, d, "documents")
 
@@ -59,7 +61,7 @@ object LexicalQueries extends QueryPack {
       val stops = Stopwords.reachable.filter(_.nonEmpty)
       val toks = docs(s, d)
         .select(col("doc_id"), posexplode(
-          TextAnalysisQueries.cleanTokens(col("text"))).as(Seq("i", "tok")))
+          cleanTokens(col("text"))).as(Seq("i", "tok")))
         .filter(col("tok") =!= "" && !col("tok").isInCollection(stops))
       val w = Window.partitionBy("doc_id").orderBy("i")
       val phrases = toks
@@ -94,7 +96,7 @@ object LexicalQueries extends QueryPack {
     "text_mattr" -> ((s, d) =>
       docs(s, d)
         .select(col("doc_id"),
-          expr(s"slice(filter(${cleanSql("text")}, x -> x != ''), 1, $MattrCap)")
+          slice(filter(cleanTokens(col("text")), x => x =!= ""), 1, MattrCap)
             .as("ts"))
         .filter(size(col("ts")) >= MattrW)
         .select(col("doc_id"), size(col("ts")).as("n_tokens"),
@@ -141,7 +143,7 @@ object LexicalQueries extends QueryPack {
     "text_watermark_detect" -> ((s, d) =>
       docs(s, d)
         .select(col("doc_id"),
-          expr(s"filter(${cleanSql("text")}, x -> x != '')").as("tk"))
+          filter(cleanTokens(col("text")), x => x =!= "").as("tk"))
         .filter(size(col("tk")) >= 2)
         .select(col("doc_id"), (size(col("tk")) - 1).as("n_bigrams"),
           expr("""size(filter(
@@ -172,10 +174,6 @@ object LexicalQueries extends QueryPack {
           expr("""round(CAST(size(array_distinct(
               transform(sequence(1, length(t) - 3), i -> substring(t, i, 4))))
             AS DOUBLE) / (length(t) - 3), 6)""").as("uniq_ratio"))))
-
-  /** The cleanTokens expression as a SQL string (for HOF lambdas). */
-  private def cleanSql(c: String): String =
-    s"split(regexp_replace(lower($c), '[^a-z ]', ''), ' +')"
 
   override val oracles: Map[String, String] = Map(
 

@@ -20,10 +20,9 @@ import graft.dedup.Shingles
   */
 object TextModelQueries extends QueryPack {
 
-  private def docs(s: SparkSession, d: String): DataFrame = Tables.load(s, d, "documents")
+  import TextAnalysisQueries.cleanTokens
 
-  private def cleanTokens(c: Column): Column =
-    split(regexp_replace(lower(c), "[^a-z ]", ""), " +")
+  private def docs(s: SparkSession, d: String): DataFrame = Tables.load(s, d, "documents")
 
   /** Winnowing window size (in 3-gram positions). */
   val WinnowW = 4
@@ -107,7 +106,7 @@ object TextModelQueries extends QueryPack {
       val dd = docs(s, d)
       val nb = nbPredictions(dd)
         .select(col("doc_id"), col("lang"), col("pred_lang").as("pred_nb"))
-      val toks = TextAnalysisQueries.cleanTokens(col("text"))
+      val toks = cleanTokens(col("text"))
       val hits = TextAnalysisQueries.countIn(
         toks, graft.text.Stopwords.reachable.filter(_.nonEmpty))
       val heur = dd.select(col("doc_id"),

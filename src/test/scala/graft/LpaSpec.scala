@@ -48,4 +48,20 @@ class LpaSpec extends SparkSpec {
       finally CacheScope.releaseAll()
     assert(run(2) == run(5))
   }
+
+  test("a planted tie resolves to the lower label; frequency beats a lower label") {
+    // One round: 10 hears {3, 7} once each; 20 hears 8 and 5 twice each
+    // and 30 once; 40 hears 2 once and 9 twice.
+    val edges = Seq((10L, 3L), (10L, 7L),
+      (20L, 8L), (20L, 8L), (20L, 5L), (20L, 5L), (20L, 30L),
+      (40L, 2L), (40L, 9L), (40L, 9L))
+    for (parts <- Seq(1, 4)) {
+      val out =
+        try GraphQueries.lpaOf(edgeDf(edges, parts), rounds = 1).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        finally CacheScope.releaseAll()
+      assert(out(10L) == 3L && out(20L) == 5L && out(40L) == 9L, s"$parts: $out")
+      assert(Seq(3L, 7L).map(out) == Seq(10L, 10L), s"$parts: $out")
+    }
+  }
 }
